@@ -60,24 +60,23 @@ def _docs_to_word_boxes(docs: DataFrame) -> DataFrame:
     """Deterministically lay each document's tokens on a page grid —
     turning the text corpus into the engine's ocr_words input shape.
 
-    The doc table is re-spread across the cluster first: the testdata
-    parquet is a single file (= one input split), and exploding 40×
-    words-per-doc from one task would serialize the whole generation stage
-    (a real corpus arrives in thousands of splits).
+    The doc table is first hash-partitioned on the STRING doc_id with the
+    same count-free ``repartition`` that ``spans_table`` makes downstream,
+    so that repartition is elided (EnsureRequirements sees
+    hashpartitioning(doc_id, n) preserved through the explode; both sides
+    plan n from the one session conf) and the 40×-wider word rows NEVER
+    cross an exchange: the only shuffle in the span pipeline carries one
+    narrow row per document (guide §8 — move heavy derived rows zero
+    times, decide placement on the light proxy).
 
-    The spread key is the STRING doc_id and the count is
-    ``spark.sql.shuffle.partitions`` — exactly the partitioning
-    ``spans_table`` requires downstream, so its repartition is elided
-    (EnsureRequirements sees hashpartitioning(doc_id, n) preserved through
-    the explode) and the 40×-wider word rows NEVER cross an exchange: the
-    only shuffle in the span pipeline carries one narrow row per document
-    (guide §8 — move heavy derived rows zero times, decide placement on
-    the light proxy)."""
-    spark = docs.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    AQE sets that exchange's task count from the narrow doc-row bytes, not
+    from the explode that follows, so the explode and the kernel spread
+    over several tasks only once the doc rows exceed the coalescing floor
+    (``coalescePartitions.minPartitionSize``, 1 MB, per task); below that
+    the whole input runs as one task."""
     docs = docs.select(
         F.col("doc_id").cast("string").alias("doc_id"), "text"
-    ).repartition(n_part, "doc_id")
+    ).repartition("doc_id")
     toks = docs.select(
         "doc_id",
         F.posexplode(F.split(F.trim("text"), r"\s+")).alias("pos", "content"),

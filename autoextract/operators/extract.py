@@ -304,8 +304,9 @@ def extract_fields(ordered_words: DataFrame, schema: AppSchema) -> DataFrame:
     this scales embarrassingly; the group size is bounded by the page cap at
     ingest (the reference enforces ≤10 pages, ``pdf.py:122-124``).
 
-    Scale shape mirrors ``order_words``: one repartition on doc_id, rows
-    sorted within partitions, and a single ``mapInPandas`` pass that walks
+    Scale shape mirrors ``order_words``: one count-free repartition on
+    doc_id (AQE coalesces its task count by shuffle bytes), rows sorted
+    within partitions, and a single ``mapInPandas`` pass that walks
     document boundaries — one Python call per partition rather than one
     ``applyInPandas`` group call per document (which costs ~1 ms/doc of
     pandas overhead × 10^12 docs at the design point).
@@ -350,11 +351,9 @@ def extract_fields(ordered_words: DataFrame, schema: AppSchema) -> DataFrame:
         if leftover is not None and len(leftover):
             yield process(leftover)
 
-    spark = ordered_words.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return (
         ordered_words.select(*needed)
-        .repartition(n_part, "doc_id")
+        .repartition("doc_id")
         .sortWithinPartitions("doc_id", "word_id")
         .mapInPandas(kernel, schema=EXTRACTED_SCHEMA)
     )
@@ -381,8 +380,8 @@ def nested_result(extracted: DataFrame, schema: AppSchema) -> DataFrame:
     JSON strings rather than structs so arbitrary schemas need no DDL; callers
     wanting typed columns apply ``from_json`` with a derived StructType.
 
-    Scale shape: repartition on doc_id + sortWithinPartitions + ONE
-    ``mapInPandas`` pass per partition (pandas groupby inside the kernel) —
+    Scale shape: count-free repartition on doc_id + sortWithinPartitions +
+    ONE ``mapInPandas`` pass per partition (pandas groupby in the kernel) —
     not ``groupBy().applyInPandas``, whose ~1 ms/group pandas overhead is
     real money at 10^12 docs (same reasoning as ``extract_fields``).
     """
@@ -464,10 +463,8 @@ def nested_result(extracted: DataFrame, schema: AppSchema) -> DataFrame:
         if leftover is not None and len(leftover):
             yield chunk_kernel(leftover)
 
-    spark = extracted.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return (
-        extracted.repartition(n_part, "doc_id")
+        extracted.repartition("doc_id")
         .sortWithinPartitions("doc_id")
         .mapInPandas(kernel, schema=out_schema)
     )

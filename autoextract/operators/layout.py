@@ -596,7 +596,7 @@ def _order_partition_arrow(batches):
             yield out_batch
 
 
-def order_words(ocr_words: DataFrame, partitions: int | None = None) -> DataFrame:
+def order_words(ocr_words: DataFrame) -> DataFrame:
     """``ocr_words(doc_id, page, word_seq, content, rec_score, points[, kind,
     media_ref])`` → reading-ordered words with global ``word_id`` (the
     ``offset`` of the target schema — SURVEY.md §2 W1, replacing the
@@ -604,9 +604,14 @@ def order_words(ocr_words: DataFrame, partitions: int | None = None) -> DataFram
 
     Scale shape — exactly ONE shuffle: ``repartition(doc_id)`` +
     ``sortWithinPartitions(doc_id, page, word_seq)`` co-locates and orders
-    each document, then a single ``mapInPandas`` pass assigns reading order
+    each document, then a single ``mapInArrow`` pass assigns reading order
     AND global offsets per document (no window, no second shuffle). Box
     folding and the empty-word filter run JVM-side before the exchange.
+
+    The repartition names no count, so AQE coalesces its
+    ``shuffle.partitions`` hash partitions by bytes (whole partitions: a
+    document never spans two tasks) and small inputs skip the per-task
+    Python cost.
 
     Skew: hash repartition balances documents across tasks; a pathological
     mega-document is bounded by the ingest page cap (the reference enforces
@@ -614,11 +619,9 @@ def order_words(ocr_words: DataFrame, partitions: int | None = None) -> DataFram
     in-memory comfortably. For corpora with unbounded single documents use
     ``order_words_paged`` (page-parallel variant) below.
     """
-    cleaned = _clean(ocr_words)
-    spark = ocr_words.sparkSession
-    n_part = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     return (
-        cleaned.repartition(n_part, "doc_id")
+        _clean(ocr_words)
+        .repartition("doc_id")
         .sortWithinPartitions("doc_id", "page", "word_seq")
         .mapInArrow(_order_partition_arrow, schema=ORDERED_SCHEMA)
     )
@@ -643,11 +646,9 @@ def order_words_auto(
     exchange (Spark plans the second read as a ReusedExchange), so the
     source parquet is scanned once however many branches fire.
     """
-    spark = ocr_words.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     shuffled = (
         _clean(ocr_words)
-        .repartition(n_part, "doc_id")
+        .repartition("doc_id")
         .sortWithinPartitions("doc_id", "page", "word_seq")
     )
     tagged = shuffled.withColumn(
@@ -789,21 +790,22 @@ def _spans_partition_arrow(batches):
             yield out
 
 
-def spans_table(ocr_words: DataFrame, partitions: int | None = None) -> DataFrame:
+def spans_table(ocr_words: DataFrame) -> DataFrame:
     """Fused fast path: ``ocr_words`` → canonical ``documents(doc_id, spans)``
     in ONE shuffle and ONE Python pass — reading order, global offsets AND
     span assembly happen inside the kernel, so there is no downstream
     groupBy/collect_list stage and word-level rows never re-cross the Arrow
     boundary (output is one nested row per document).
 
+    The shuffle is ``order_words``' count-free repartition; an input already
+    so partitioned (``_docs_to_word_boxes``) elides it.
+
     Semantically identical to ``assemble_spans(order_words(df))`` (tested);
     prefer this form in pipelines that don't also need the word-level table.
     """
-    cleaned = _clean(ocr_words)
-    spark = ocr_words.sparkSession
-    n_part = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     return (
-        cleaned.repartition(n_part, "doc_id")
+        _clean(ocr_words)
+        .repartition("doc_id")
         .sortWithinPartitions("doc_id", "page", "word_seq")
         .mapInArrow(_spans_partition_arrow, schema=SPANS_TABLE_SCHEMA)
     )

@@ -11,6 +11,7 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Initial shuffle partition count; AQE coalesces doc-keyed exchanges by bytes.
 DEFAULT_SHUFFLE_PARTITIONS = 32
 # Arrow batch size for pandas UDF stages: large enough to amortize the
 # Python/Arrow round-trip (word-level rows are ~200 bytes, so 16k rows ≈ 3 MB

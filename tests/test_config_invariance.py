@@ -1,0 +1,87 @@
+"""Span-pipeline results must not depend on engine configuration.
+
+``spans_table`` and ``extract_fields`` repartition on doc_id without a
+partition count, so the number and size of their kernel tasks follow AQE,
+the shuffle-partition conf and the Arrow batch size. Each perturbation
+below must reproduce the default run's output exactly:
+
+* ``maxRecordsPerBatch=7`` splits nearly every document across Arrow
+  batches, exercising the kernels' doc-boundary buffering — the path that
+  larger, coalesced partitions reach more often;
+* ``shuffle.partitions`` 1 and 7 change the hash layout (7 is coprime with
+  the default, 1 puts every document in one task);
+* AQE off keeps the full ``shuffle.partitions`` task count, uncoalesced.
+"""
+
+from __future__ import annotations
+
+from contextlib import contextmanager
+
+import pytest
+
+from autoextract import corpus
+from autoextract.operators.extract import extract_fields
+from autoextract.operators.layout import order_words, spans_table
+from autoextract.schema import SHIPPING_SCHEMA
+
+N_DOCS = 40
+
+PERTURBATIONS = {
+    "arrow_batch_7": {"spark.sql.execution.arrow.maxRecordsPerBatch": "7"},
+    "shuffle_partitions_1": {"spark.sql.shuffle.partitions": "1"},
+    "shuffle_partitions_7": {"spark.sql.shuffle.partitions": "7"},
+    "aqe_off": {"spark.sql.adaptive.enabled": "false"},
+}
+
+
+@contextmanager
+def session_conf(spark, conf: dict[str, str]):
+    """Set runtime SQL confs for the block, then restore the prior values."""
+    prior = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+@pytest.fixture(scope="module")
+def words(spark):
+    df = corpus.ocr_words_view(corpus.gen_corpus(spark, N_DOCS, seed=31)).cache()
+    df.count()
+    yield df
+    df.unpersist()
+
+
+def _results(words) -> tuple[dict, list]:
+    # DataFrames are built inside the caller's conf block: a count-free
+    # repartition takes its initial partition count at planning time
+    spans = {r.doc_id: r.spans for r in spans_table(words).collect()}
+    fields = sorted(
+        (r.doc_id, r.field_path, r.value, tuple(r.word_ids), r.confidence)
+        for r in extract_fields(order_words(words), SHIPPING_SCHEMA).collect()
+    )
+    return spans, fields
+
+
+@pytest.fixture(scope="module")
+def baseline(words):
+    spans, fields = _results(words)
+    assert len(spans) == N_DOCS and fields
+    return spans, fields
+
+
+@pytest.mark.parametrize("name", sorted(PERTURBATIONS))
+def test_span_pipeline_config_invariant(spark, words, baseline, name):
+    conf = PERTURBATIONS[name]
+    before = {k: spark.conf.get(k, None) for k in conf}
+    with session_conf(spark, conf):
+        got = _results(words)
+    assert {k: spark.conf.get(k, None) for k in conf} == before
+    assert got[0] == baseline[0]
+    assert got[1] == baseline[1]

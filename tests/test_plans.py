@@ -7,6 +7,8 @@ exchange counts in the span pipeline)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 import __spark_entry__ as E
@@ -17,6 +19,17 @@ SF = "/root/testdata/sf0.001"
 def plan_str(df, mode: str = "formatted") -> str:
     jmode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
     return df._jdf.queryExecution().explainString(jmode)
+
+
+def final_plan_str(df) -> str:
+    """Run ``df`` and return AQE's final physical plan: the stages that ran,
+    with their shuffle reads, and without the initial plan's copy."""
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().executedPlan().toString()
+
+
+def n_exchanges(plan: str) -> int:
+    return len(re.findall(r"\bExchange\b", plan))
 
 
 def test_filter_pushed_to_parquet_scan(spark):
@@ -96,14 +109,31 @@ def test_srp_bucket_prune_before_rerank(spark):
 
 def test_fused_spans_single_exchange(spark):
     """spans_table = exactly ONE exchange (the doc_id repartition): the
-    kernel assembles documents in-pass, so no groupBy stage exists."""
+    kernel assembles documents in-pass, so no groupBy stage exists, and
+    the renderer's count-free doc_id spread IS that exchange — the word
+    rows never cross one. Checked on the plan AQE actually ran."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     from autoextract.operators.layout import spans_table
 
-    p = plan_str(spans_table(E._docs_to_word_boxes(docs)), "simple")
-    assert p.count("Exchange") <= 2  # doc repartition + source re-spread
+    p = final_plan_str(spans_table(E._docs_to_word_boxes(docs)))
+    assert n_exchanges(p) == 1, p
+    assert "REPARTITION_BY_COL" in p
     assert "HashAggregate" not in p and "ObjectHashAggregate" not in p
     assert "Window" not in p
+
+
+def test_ocr_words_spans_single_coalesced_exchange(spark, tmp_path):
+    """A stored ocr_words table reaches the span kernel through exactly one
+    doc_id exchange, and AQE coalesces its read: the kernel's task count
+    follows the shuffle bytes, not ``spark.sql.shuffle.partitions``."""
+    from autoextract import corpus
+    from autoextract.operators.layout import spans_table
+
+    path = str(tmp_path / "ocr_words")
+    corpus.ocr_words_view(corpus.gen_corpus(spark, 40, seed=5)).write.parquet(path)
+    p = final_plan_str(spans_table(spark.read.parquet(path)))
+    assert n_exchanges(p) == 1, p
+    assert "AQEShuffleRead coalesced" in p, p
 
 
 def test_pdf_query_filter_pushdown(spark):

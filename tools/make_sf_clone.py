@@ -77,8 +77,10 @@ def main() -> None:
                     rng = np.random.default_rng(1000 + i)
                     vals = vals + rng.normal(0, 0.03, size=vals.shape).astype(
                         np.float32)
+                    # offsets carry no validity bitmap: keep null rows null
                     col = pa.ListArray.from_arrays(arr.offsets,
-                                                   pa.array(vals.astype(np.float32)))
+                                                   pa.array(vals.astype(np.float32)),
+                                                   mask=arr.is_null())
                 cols.append(col)
             reps.append(pa.table(cols, names=tab.column_names))
         big = pa.concat_tables(reps)
