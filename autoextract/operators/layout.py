@@ -17,18 +17,21 @@ implements the classic recipe the north_star prescribes:
      ties broken by the producer's ``word_seq`` so the order is total and
      deterministic.
 
-Everything is NumPy inside ``applyInPandas`` grouped by ``(doc_id, page)`` —
-pages are independent reading units (the reference also processes per page,
-``ocr.py:157-175``), so a pathological mega-document parallelizes across its
-pages instead of stalling one task (skew policy, SURVEY.md §4 item 1). The
-only full-document operation is the global offset window (SURVEY.md §2 W1),
-a single range shuffle on ``doc_id``.
+Pages are independent reading units (the reference also processes per page,
+``ocr.py:157-175``). The Spark side is one kernel behind one shuffle:
+``_doc_sorted`` cleans the words JVM-side, hash-partitions them on ``doc_id``
+and sorts each partition by (doc_id, page, word_seq); one ``mapInArrow``
+pass then orders each page and assigns the global offsets (SURVEY.md §2 W1)
+over whole Arrow batches, emitting word rows (``order_words``) or one nested
+span row per document (``spans_table``). ``order_words_paged`` runs the same
+chunk kernel per (doc_id, page) group, so a pathological mega-document
+parallelizes across its pages instead of stalling one task (skew policy,
+SURVEY.md §4 item 1).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -320,50 +323,23 @@ def page_reading_order(
 # ----------------------------------------------------------------------
 # Spark stage
 # ----------------------------------------------------------------------
-#: output schema of the per-page layout stage
-LAYOUT_SCHEMA = (
-    "doc_id string, page int, seq int, kind string, content string, "
-    "media_ref string, rec_score double, x0 double, y0 double, "
-    "x1 double, y1 double, block_id int, line_id int"
-)
-
-#: output schema of the partition-batched fast path (word_id = global offset)
+#: output schema of ``order_words`` (word_id = global offset within the doc)
 ORDERED_SCHEMA = (
     "doc_id string, page int, seq int, kind string, content string, "
     "media_ref string, rec_score double, x0 double, y0 double, "
     "x1 double, y1 double, block_id int, line_id int, word_id int"
 )
 
+#: canonical output of the fused direct path
+SPANS_TABLE_SCHEMA = (
+    "doc_id string, spans array<struct<kind:string, text:string, "
+    "media_ref:string, offset:int>>"
+)
 
-def _layout_one_page_flat(pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas kernel: one (doc_id, page) group (flat-box input from
-    ``_clean``) → reading-ordered rows."""
-    n = len(pdf)
-    boxes = np.stack(
-        [pdf["x0"].to_numpy(), pdf["y0"].to_numpy(), pdf["x1"].to_numpy(), pdf["y1"].to_numpy()],
-        axis=1,
-    ) if n else np.zeros((0, 4))
-    perm, block_id, line_id = page_reading_order(
-        boxes, tiebreak=pdf["word_seq"].to_numpy()
-    )
-    out = pd.DataFrame(
-        {
-            "doc_id": pdf["doc_id"].to_numpy()[perm],
-            "page": pdf["page"].to_numpy()[perm].astype("int32"),
-            "seq": np.arange(n, dtype="int32"),
-            "kind": pdf["kind"].to_numpy()[perm],
-            "content": pdf["content"].to_numpy()[perm],
-            "media_ref": pdf["media_ref"].to_numpy()[perm],
-            "rec_score": pdf["rec_score"].to_numpy()[perm],
-            "x0": boxes[perm, 0],
-            "y0": boxes[perm, 1],
-            "x1": boxes[perm, 2],
-            "y1": boxes[perm, 3],
-            "block_id": block_id[perm].astype("int32"),
-            "line_id": line_id[perm].astype("int32"),
-        }
-    )
-    return out
+#: the chunk core's geometry memo is cleared before its keys' cumulative
+#: bytes would pass this; values are smaller than their keys, so one task's
+#: memo stays under twice this however large or diverse its pages are
+MEMO_BYTES = 64 << 20
 
 
 def _clean(ocr_words: DataFrame) -> DataFrame:
@@ -405,98 +381,33 @@ def _clean(ocr_words: DataFrame) -> DataFrame:
     return out
 
 
-_COLS = [
-    "doc_id", "page", "word_seq", "kind", "content", "media_ref",
-    "rec_score", "x0", "y0", "x1", "y1",
-]
+def _doc_sorted(ocr_words: DataFrame) -> DataFrame:
+    """The kernels' input contract: cleaned words, every document complete in
+    one partition and sorted by (doc_id, page, word_seq).
 
-
-def _order_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Reading-order a chunk of COMPLETE documents (sorted by doc_id, page,
-    word_seq). One vectorized output construction for the whole chunk; the
-    per-page ``page_reading_order`` calls are the only Python-level loop."""
-    n = len(pdf)
-    ids = pdf["doc_id"].to_numpy(dtype=object)
-    pages = pdf["page"].to_numpy()
-    seqs = pdf["word_seq"].to_numpy()
-    boxes = np.stack(
-        [pdf["x0"].to_numpy(), pdf["y0"].to_numpy(), pdf["x1"].to_numpy(), pdf["y1"].to_numpy()],
-        axis=1,
-    )
-    # (doc, page) group boundaries in one pass
-    changed = np.flatnonzero((ids[1:] != ids[:-1]) | (pages[1:] != pages[:-1])) + 1
-    starts = np.concatenate(([0], changed))
-    ends = np.concatenate((changed, [n]))
-    doc_start = np.concatenate(([0], np.flatnonzero(ids[1:] != ids[:-1]) + 1))
-
-    perm = np.empty(n, dtype=np.int64)
-    block_id = np.empty(n, dtype=np.int32)
-    line_id = np.empty(n, dtype=np.int32)
-    seq_out = np.empty(n, dtype=np.int32)
-    word_id = np.empty(n, dtype=np.int32)
-    doc_starts = set(doc_start.tolist())
-    base = 0  # global word_id base within the current doc
-    for lo, hi in zip(starts, ends):
-        if lo in doc_starts:
-            base = lo
-        p, b, l = page_reading_order(boxes[lo:hi], tiebreak=seqs[lo:hi])
-        perm[lo:hi] = p + lo
-        block_id[lo:hi] = b[p]
-        line_id[lo:hi] = l[p]
-        seq_out[lo:hi] = np.arange(hi - lo, dtype=np.int32)
-        word_id[lo:hi] = np.arange(lo - base, hi - base, dtype=np.int32)
-
-    return pd.DataFrame(
-        {
-            "doc_id": ids[perm],
-            "page": pages[perm].astype("int32"),
-            "seq": seq_out,
-            "kind": pdf["kind"].to_numpy()[perm],
-            "content": pdf["content"].to_numpy()[perm],
-            "media_ref": pdf["media_ref"].to_numpy()[perm],
-            "rec_score": pdf["rec_score"].to_numpy()[perm],
-            "x0": boxes[perm, 0],
-            "y0": boxes[perm, 1],
-            "x1": boxes[perm, 2],
-            "y1": boxes[perm, 3],
-            "block_id": block_id,
-            "line_id": line_id,
-            "word_id": word_id,
-        }
+    The repartition names no count, so AQE coalesces its
+    ``shuffle.partitions`` hash partitions by bytes (whole partitions: a
+    document never spans two tasks) and small inputs skip the per-task
+    Python cost. An input already so partitioned (``_docs_to_word_boxes``)
+    elides the exchange."""
+    return (
+        _clean(ocr_words)
+        .repartition("doc_id")
+        .sortWithinPartitions("doc_id", "page", "word_seq")
     )
 
 
-def _order_partition(batches):
-    """mapInPandas kernel: a partition holds complete documents (rows
-    repartitioned by doc_id and sorted by (doc_id, page, word_seq)); Arrow
-    batches may split a document, so buffer the tail until the doc_id
-    changes. One Python call per partition, not per group."""
-    leftover: pd.DataFrame | None = None
-    for pdf in batches:
-        if leftover is not None:
-            pdf = pd.concat([leftover, pdf], ignore_index=True)
-            leftover = None
-        if len(pdf) == 0:
-            continue
-        ids = pdf["doc_id"].to_numpy(dtype=object)
-        # last complete doc boundary; hold the final doc (may continue)
-        tail_mask = ids != ids[-1]
-        cut = int(np.flatnonzero(tail_mask).max() + 1) if tail_mask.any() else 0
-        if cut > 0:
-            yield _order_chunk(pdf.iloc[:cut])
-        leftover = pdf.iloc[cut:].reset_index(drop=True)
-    if leftover is not None and len(leftover):
-        yield _order_chunk(leftover)
+def _layout_chunk(tbl):
+    """Reading order for an Arrow table of COMPLETE documents sorted by
+    (doc_id, page, word_seq) — or one page of one document.
 
-
-def _order_chunk_arrow(tbl):
-    """Arrow-native variant of ``_order_chunk``: geometry/ids come out as
-    zero-copy numpy; string columns (doc_id/content/...) are never
-    materialized as Python objects — group boundaries are computed with
-    pyarrow compute and the final reorder is a C++ ``take``. This keeps the
-    Python side allocation-free, which is what lets 32 concurrent workers
-    scale instead of saturating the allocator/memory bus."""
-    import pyarrow as pa
+    Returns ``(perm, seq, word_id, block_id, line_id, doc_bounds)``: ``perm``
+    takes the input rows to reading order, the next four are aligned with
+    the permuted rows, and ``doc_bounds`` holds each document's first row
+    plus the row count. Geometry and ids come out as zero-copy numpy and
+    group bounds from pyarrow compute; the per-page ``page_reading_order``
+    calls are the only Python-level loop.
+    """
     import pyarrow.compute as pc
 
     n = tbl.num_rows
@@ -515,85 +426,129 @@ def _order_chunk_arrow(tbl):
     changed = np.union1d(id_change, page_change)
     starts = np.concatenate(([0], changed))
     ends = np.concatenate((changed, [n]))
-    doc_starts = set(np.concatenate(([0], id_change)).tolist())
+    doc_bounds = np.concatenate(([0], id_change, [n]))
+    # row position within its page / its document, in reading order too
+    # (perm only permutes within a page)
+    rows = np.arange(n, dtype=np.int32)
+    seq = rows - np.repeat(starts, ends - starts).astype(np.int32)
+    word_id = rows - np.repeat(doc_bounds[:-1], np.diff(doc_bounds)).astype(np.int32)
 
     perm = np.empty(n, dtype=np.int64)
     block_id = np.empty(n, dtype=np.int32)
     line_id = np.empty(n, dtype=np.int32)
-    seq_out = np.empty(n, dtype=np.int32)
-    word_id = np.empty(n, dtype=np.int32)
-    base = 0
-    # per-chunk geometry memo — see _spans_chunk_arrow: pure-function CSE
-    # for templated corpora, no state beyond this call
+    # Per-CHUNK memo on the page's exact geometry bytes: templated corpora
+    # (forms, rendered grids) repeat page layouts verbatim, and reading
+    # order is a pure function of (boxes, tiebreak) — identical bytes ⇒
+    # identical permutation. The dict lives only for this call (no
+    # module/worker state, nothing persists across tasks or runs), so this
+    # is common-subexpression elimination, not result caching. Diverse-
+    # layout corpora pay ~1 µs/page of hashing and miss.
     memo: dict = {}
+    memo_bytes = 0
     for lo, hi in zip(starts, ends):
-        if lo in doc_starts:
-            base = lo
         sub = boxes[lo:hi]
         tb = seqs[lo:hi]
         key = (sub.tobytes(), tb.tobytes())
         hit = memo.get(key)
         if hit is None:
             p, b, l = page_reading_order(sub, tiebreak=tb)
-            if len(memo) >= 8192:
+            size = len(key[0]) + len(key[1])
+            if memo_bytes + size > MEMO_BYTES:
                 memo.clear()
+                memo_bytes = 0
             memo[key] = hit = (p, b[p], l[p])
+            memo_bytes += size
         p, bp, lp = hit
         perm[lo:hi] = p + lo
         block_id[lo:hi] = bp
         line_id[lo:hi] = lp
-        seq_out[lo:hi] = np.arange(hi - lo, dtype=np.int32)
-        word_id[lo:hi] = np.arange(lo - base, hi - base, dtype=np.int32)
+    return perm, seq, word_id, block_id, line_id, doc_bounds
 
-    taken = tbl.take(pa.array(perm))
-    return pa.table(
-        {
-            "doc_id": taken.column("doc_id"),
-            "page": taken.column("page"),
-            "seq": pa.array(seq_out, type=pa.int32()),
-            "kind": taken.column("kind"),
-            "content": taken.column("content"),
-            "media_ref": taken.column("media_ref"),
-            "rec_score": taken.column("rec_score"),
-            "x0": taken.column("x0"),
-            "y0": taken.column("y0"),
-            "x1": taken.column("x1"),
-            "y1": taken.column("y1"),
-            "block_id": pa.array(block_id, type=pa.int32()),
-            "line_id": pa.array(line_id, type=pa.int32()),
-            "word_id": pa.array(word_id, type=pa.int32()),
-        }
+
+def _order_chunk_arrow(tbl):
+    """Complete docs (or one page of one doc) → reading-ordered word rows
+    (``ORDERED_SCHEMA``). String columns are never materialized as Python
+    objects: the reorder is a C++ ``take``."""
+    import pyarrow as pa
+
+    perm, seq, word_id, block_id, line_id, _ = _layout_chunk(tbl)
+    out = tbl.take(pa.array(perm))
+    # _clean's columns in order, with word_seq → seq, plus the layout ids
+    out = out.set_column(
+        out.schema.get_field_index("word_seq"), "seq", pa.array(seq, type=pa.int32())
     )
+    for name, col in (("block_id", block_id), ("line_id", line_id), ("word_id", word_id)):
+        out = out.append_column(name, pa.array(col, type=pa.int32()))
+    return out
 
 
-def _order_partition_arrow(batches):
-    """mapInArrow kernel with the same doc-boundary buffering contract as
-    ``_order_partition``, minus any pandas/PyObject materialization."""
+def _spans_chunk_arrow(tbl):
+    """Chunk of complete docs → one row per doc with the assembled span array
+    (``SPANS_TABLE_SCHEMA``). All array building is pyarrow C++."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    leftover = None
-    for batch in batches:
-        tbl = pa.Table.from_batches([batch])
-        if leftover is not None:
-            tbl = pa.concat_tables([leftover, tbl]).combine_chunks()
-            leftover = None
-        n = tbl.num_rows
-        if n == 0:
-            continue
-        ids = tbl.column("doc_id")
-        last = ids.slice(n - 1, 1)
-        not_last = np.invert(
-            pc.equal(ids, last[0]).to_numpy(zero_copy_only=False)
-        )
-        cut = int(np.flatnonzero(not_last).max() + 1) if not_last.any() else 0
-        if cut > 0:
-            for out_batch in _order_chunk_arrow(tbl.slice(0, cut)).to_batches():
-                yield out_batch
-        leftover = tbl.slice(cut)
-    if leftover is not None and leftover.num_rows:
-        for out_batch in _order_chunk_arrow(leftover.combine_chunks()).to_batches():
-            yield out_batch
+    perm, _, word_id, _, _, doc_bounds = _layout_chunk(tbl)
+    taken = tbl.take(pa.array(perm))
+    kind = taken.column("kind").combine_chunks()
+    is_text = pc.equal(kind, "text")
+    struct = pa.StructArray.from_arrays(
+        [
+            kind,
+            pc.if_else(is_text, taken.column("content").combine_chunks(),
+                       pa.scalar(None, pa.string())),
+            pc.if_else(is_text, pa.scalar(None, pa.string()),
+                       taken.column("media_ref").combine_chunks()),
+            pa.array(word_id, type=pa.int32()),
+        ],
+        names=["kind", "text", "media_ref", "offset"],
+    )
+    spans = pa.ListArray.from_arrays(
+        pa.array(doc_bounds, type=pa.int32()), struct
+    )
+    doc_ids = tbl.column("doc_id").take(pa.array(doc_bounds[:-1]))
+    return pa.table({"doc_id": doc_ids, "spans": spans})
+
+
+def _per_doc(build):
+    """``mapInArrow`` kernel running ``build`` over a ``_doc_sorted``
+    partition. Arrow batches may split a document, so the tail document is
+    buffered until the doc_id changes; ``build`` only ever sees complete
+    documents. One Python call per partition, not per group."""
+
+    def kernel(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        leftover = None
+        for batch in batches:
+            tbl = pa.Table.from_batches([batch])
+            if leftover is not None:
+                tbl = pa.concat_tables([leftover, tbl]).combine_chunks()
+                leftover = None
+            n = tbl.num_rows
+            if n == 0:
+                continue
+            ids = tbl.column("doc_id")
+            not_last = np.invert(
+                pc.equal(ids, ids.slice(n - 1, 1)[0]).to_numpy(zero_copy_only=False)
+            )
+            cut = int(np.flatnonzero(not_last).max() + 1) if not_last.any() else 0
+            if cut > 0:
+                yield from build(tbl.slice(0, cut)).to_batches()
+            leftover = tbl.slice(cut)
+        if leftover is not None and leftover.num_rows:
+            yield from build(leftover.combine_chunks()).to_batches()
+
+    kernel.__name__ = build.__name__  # names the MapInArrow node in plans
+    return kernel
+
+
+def _order_page_arrow(page):
+    """``applyInArrow`` kernel for one (doc_id, page) group. A group arrives
+    in no particular row order; sorted by word_seq, it is the input
+    ``order_words``' sorted partition gives the same builder."""
+    return _order_chunk_arrow(page.sort_by("word_seq"))
 
 
 def order_words(ocr_words: DataFrame) -> DataFrame:
@@ -602,16 +557,10 @@ def order_words(ocr_words: DataFrame) -> DataFrame:
     ``offset`` of the target schema — SURVEY.md §2 W1, replacing the
     reference's O(n²) re-match at ``ocr.py:311-322``).
 
-    Scale shape — exactly ONE shuffle: ``repartition(doc_id)`` +
-    ``sortWithinPartitions(doc_id, page, word_seq)`` co-locates and orders
+    Scale shape — exactly ONE shuffle: ``_doc_sorted`` co-locates and orders
     each document, then a single ``mapInArrow`` pass assigns reading order
     AND global offsets per document (no window, no second shuffle). Box
     folding and the empty-word filter run JVM-side before the exchange.
-
-    The repartition names no count, so AQE coalesces its
-    ``shuffle.partitions`` hash partitions by bytes (whole partitions: a
-    document never spans two tasks) and small inputs skip the per-task
-    Python cost.
 
     Skew: hash repartition balances documents across tasks; a pathological
     mega-document is bounded by the ingest page cap (the reference enforces
@@ -619,11 +568,8 @@ def order_words(ocr_words: DataFrame) -> DataFrame:
     in-memory comfortably. For corpora with unbounded single documents use
     ``order_words_paged`` (page-parallel variant) below.
     """
-    return (
-        _clean(ocr_words)
-        .repartition("doc_id")
-        .sortWithinPartitions("doc_id", "page", "word_seq")
-        .mapInArrow(_order_partition_arrow, schema=ORDERED_SCHEMA)
+    return _doc_sorted(ocr_words).mapInArrow(
+        _per_doc(_order_chunk_arrow), schema=ORDERED_SCHEMA
     )
 
 
@@ -646,18 +592,13 @@ def order_words_auto(
     exchange (Spark plans the second read as a ReusedExchange), so the
     source parquet is scanned once however many branches fire.
     """
-    shuffled = (
-        _clean(ocr_words)
-        .repartition("doc_id")
-        .sortWithinPartitions("doc_id", "page", "word_seq")
-    )
-    tagged = shuffled.withColumn(
+    tagged = _doc_sorted(ocr_words).withColumn(
         "__doc_n", F.count("*").over(Window.partitionBy("doc_id"))
     )
     normal = (
         tagged.where(F.col("__doc_n") <= mega_threshold)
         .drop("__doc_n")
-        .mapInArrow(_order_partition_arrow, schema=ORDERED_SCHEMA)
+        .mapInArrow(_per_doc(_order_chunk_arrow), schema=ORDERED_SCHEMA)
     )
     mega = order_words_paged(
         tagged.where(F.col("__doc_n") > mega_threshold).drop("__doc_n"),
@@ -667,127 +608,19 @@ def order_words_auto(
 
 
 def order_words_paged(ocr_words: DataFrame, _pre_cleaned: bool = False) -> DataFrame:
-    """Page-parallel variant: ``applyInPandas`` per (doc_id, page) then a
-    window for global offsets. Two shuffles, higher per-group overhead, but
-    a single enormous document parallelizes across its pages — the manual
-    salting policy for unbounded-doc corpora (SURVEY.md §4 item 1).
-    ``_pre_cleaned`` skips the empty-word filter / box folding when the
-    input already went through ``_clean`` (the auto router's mega branch)."""
+    """Page-parallel variant: the same chunk kernel per (doc_id, page) group
+    via ``applyInArrow``, then a window for global offsets. Two shuffles,
+    higher per-group overhead, but a single enormous document parallelizes
+    across its pages — the manual salting policy for unbounded-doc corpora
+    (SURVEY.md §4 item 1). ``_pre_cleaned`` skips the empty-word filter /
+    box folding when the input already went through ``_clean`` (the auto
+    router's mega branch)."""
     cleaned = ocr_words if _pre_cleaned else _clean(ocr_words)
-    laid_out = cleaned.groupBy("doc_id", "page").applyInPandas(
-        _layout_one_page_flat, schema=LAYOUT_SCHEMA
+    laid_out = cleaned.groupBy("doc_id", "page").applyInArrow(
+        _order_page_arrow, schema=ORDERED_SCHEMA
     )
     w = Window.partitionBy("doc_id").orderBy("page", "seq")
     return laid_out.withColumn("word_id", (F.row_number().over(w) - 1).cast("int"))
-
-
-#: canonical output of the fused direct path
-SPANS_TABLE_SCHEMA = (
-    "doc_id string, spans array<struct<kind:string, text:string, "
-    "media_ref:string, offset:int>>"
-)
-
-
-def _spans_chunk_arrow(tbl):
-    """Chunk of COMPLETE docs (sorted by doc, page, word_seq) → one row per
-    doc with the assembled span array. All array building is pyarrow C++."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    n = tbl.num_rows
-    pages = tbl.column("page").to_numpy()
-    seqs = tbl.column("word_seq").to_numpy()
-    boxes = np.stack(
-        [tbl.column(c).to_numpy() for c in ("x0", "y0", "x1", "y1")], axis=1
-    )
-    ids = tbl.column("doc_id")
-    id_change = np.flatnonzero(
-        np.invert(
-            pc.equal(ids.slice(1), ids.slice(0, n - 1)).to_numpy(zero_copy_only=False)
-        )
-    ) + 1
-    page_change = np.flatnonzero(pages[1:] != pages[:-1]) + 1
-    changed = np.union1d(id_change, page_change)
-    starts = np.concatenate(([0], changed))
-    ends = np.concatenate((changed, [n]))
-    doc_bounds = np.concatenate(([0], id_change, [n]))
-
-    perm = np.empty(n, dtype=np.int64)
-    word_id = np.empty(n, dtype=np.int32)
-    doc_starts = set(doc_bounds[:-1].tolist())
-    base = 0
-    # Per-CHUNK memo on the page's exact geometry bytes: templated corpora
-    # (forms, rendered grids) repeat page layouts verbatim, and reading
-    # order is a pure function of (boxes, tiebreak) — identical bytes ⇒
-    # identical permutation. The dict lives only for this chunk call (no
-    # module/worker state, nothing persists across tasks or runs; a fresh
-    # bench invocation recomputes everything), so this is common-
-    # subexpression elimination, not result caching. Diverse-layout
-    # corpora pay ~1 µs/page of hashing and miss.
-    memo: dict = {}
-    for lo, hi in zip(starts, ends):
-        if lo in doc_starts:
-            base = lo
-        sub = boxes[lo:hi]
-        tb = seqs[lo:hi]
-        key = (sub.tobytes(), tb.tobytes())
-        p = memo.get(key)
-        if p is None:
-            p, _, _ = page_reading_order(sub, tiebreak=tb)
-            if len(memo) >= 8192:
-                memo.clear()
-            memo[key] = p
-        perm[lo:hi] = p + lo
-        word_id[lo:hi] = np.arange(lo - base, hi - base, dtype=np.int32)
-
-    taken = tbl.take(pa.array(perm))
-    kind = taken.column("kind").combine_chunks()
-    is_text = pc.equal(kind, "text")
-    struct = pa.StructArray.from_arrays(
-        [
-            kind,
-            pc.if_else(is_text, taken.column("content").combine_chunks(),
-                       pa.scalar(None, pa.string())),
-            pc.if_else(is_text, pa.scalar(None, pa.string()),
-                       taken.column("media_ref").combine_chunks()),
-            pa.array(word_id, type=pa.int32()),
-        ],
-        names=["kind", "text", "media_ref", "offset"],
-    )
-    spans = pa.ListArray.from_arrays(
-        pa.array(doc_bounds, type=pa.int32()), struct
-    )
-    doc_ids = ids.take(pa.array(doc_bounds[:-1]))
-    return pa.table({"doc_id": doc_ids, "spans": spans})
-
-
-def _spans_partition_arrow(batches):
-    """mapInArrow kernel: complete documents per partition → span table rows.
-    Same doc-boundary buffering as ``_order_partition_arrow``."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    leftover = None
-    for batch in batches:
-        tbl = pa.Table.from_batches([batch])
-        if leftover is not None:
-            tbl = pa.concat_tables([leftover, tbl]).combine_chunks()
-            leftover = None
-        n = tbl.num_rows
-        if n == 0:
-            continue
-        ids = tbl.column("doc_id")
-        not_last = np.invert(
-            pc.equal(ids, ids.slice(n - 1, 1)[0]).to_numpy(zero_copy_only=False)
-        )
-        cut = int(np.flatnonzero(not_last).max() + 1) if not_last.any() else 0
-        if cut > 0:
-            for out in _spans_chunk_arrow(tbl.slice(0, cut)).to_batches():
-                yield out
-        leftover = tbl.slice(cut)
-    if leftover is not None and leftover.num_rows:
-        for out in _spans_chunk_arrow(leftover.combine_chunks()).to_batches():
-            yield out
 
 
 def spans_table(ocr_words: DataFrame) -> DataFrame:
@@ -797,17 +630,14 @@ def spans_table(ocr_words: DataFrame) -> DataFrame:
     groupBy/collect_list stage and word-level rows never re-cross the Arrow
     boundary (output is one nested row per document).
 
-    The shuffle is ``order_words``' count-free repartition; an input already
+    The shuffle is ``_doc_sorted``'s count-free repartition; an input already
     so partitioned (``_docs_to_word_boxes``) elides it.
 
     Semantically identical to ``assemble_spans(order_words(df))`` (tested);
     prefer this form in pipelines that don't also need the word-level table.
     """
-    return (
-        _clean(ocr_words)
-        .repartition("doc_id")
-        .sortWithinPartitions("doc_id", "page", "word_seq")
-        .mapInArrow(_spans_partition_arrow, schema=SPANS_TABLE_SCHEMA)
+    return _doc_sorted(ocr_words).mapInArrow(
+        _per_doc(_spans_chunk_arrow), schema=SPANS_TABLE_SCHEMA
     )
 
 

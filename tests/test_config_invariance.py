@@ -1,9 +1,10 @@
 """Span-pipeline results must not depend on engine configuration.
 
-``spans_table`` and ``extract_fields`` repartition on doc_id without a
-partition count, so the number and size of their kernel tasks follow AQE,
-the shuffle-partition conf and the Arrow batch size. Each perturbation
-below must reproduce the default run's output exactly:
+``spans_table``, ``order_words`` and ``extract_fields`` repartition on
+doc_id without a partition count, so the number and size of their kernel
+tasks follow AQE, the shuffle-partition conf and the Arrow batch size. Each
+perturbation below must reproduce the default run's output exactly (the
+span table, the full ``order_words`` rows and the extracted fields):
 
 * ``maxRecordsPerBatch=7`` splits nearly every document across Arrow
   batches, exercising the kernels' doc-boundary buffering — the path that
@@ -58,22 +59,26 @@ def words(spark):
     df.unpersist()
 
 
-def _results(words) -> tuple[dict, list]:
+def _results(words) -> tuple[dict, list, list]:
     # DataFrames are built inside the caller's conf block: a count-free
     # repartition takes its initial partition count at planning time
     spans = {r.doc_id: r.spans for r in spans_table(words).collect()}
+    ordered = order_words(words)
+    # (doc_id, page, seq) is unique, so the sort never compares None cells
+    rows = sorted(tuple(r) for r in ordered.collect())
     fields = sorted(
         (r.doc_id, r.field_path, r.value, tuple(r.word_ids), r.confidence)
-        for r in extract_fields(order_words(words), SHIPPING_SCHEMA).collect()
+        for r in extract_fields(ordered, SHIPPING_SCHEMA).collect()
     )
-    return spans, fields
+    return spans, fields, rows
 
 
 @pytest.fixture(scope="module")
 def baseline(words):
-    spans, fields = _results(words)
+    spans, fields, rows = _results(words)
     assert len(spans) == N_DOCS and fields
-    return spans, fields
+    assert len({r[0] for r in rows}) == N_DOCS
+    return spans, fields, rows
 
 
 @pytest.mark.parametrize("name", sorted(PERTURBATIONS))
@@ -85,3 +90,4 @@ def test_span_pipeline_config_invariant(spark, words, baseline, name):
     assert {k: spark.conf.get(k, None) for k in conf} == before
     assert got[0] == baseline[0]
     assert got[1] == baseline[1]
+    assert got[2] == baseline[2]

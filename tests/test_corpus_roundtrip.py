@@ -114,6 +114,22 @@ def test_order_words_auto_routes_and_matches(spark, gen, got_spans):
     assert diff.count() == 0
 
 
+def test_order_words_paged_equals_order_words(spark, gen):
+    """The page-parallel path must reproduce the fast path's word rows on
+    every ORDERED_SCHEMA column — seq, block_id and line_id included, which
+    assemble_spans drops but extraction and furniture detection read."""
+    from autoextract.operators.layout import ORDERED_SCHEMA, order_words_paged
+
+    words = corpus.ocr_words_view(gen)
+    fast = order_words(words)
+    paged = order_words_paged(words)
+    assert paged.schema.simpleString() == fast.schema.simpleString()
+    assert len(fast.columns) == len(ORDERED_SCHEMA.split(",")) == 14
+    assert paged.count() == fast.count()
+    diff = fast.exceptAll(paged).union(paged.exceptAll(fast))
+    assert diff.count() == 0
+
+
 def test_spans_table_fused_equals_two_step(spark, gen, got_spans):
     """The one-shuffle fused kernel must equal assemble_spans(order_words)."""
     from autoextract.operators.layout import spans_table

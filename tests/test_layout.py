@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from autoextract import corpus
 from autoextract.operators import layout
@@ -103,7 +104,7 @@ class TestSparkLayout:
 
 
 class TestGeometryMemo:
-    """The per-chunk geometry memo in the Arrow kernels must be pure CSE:
+    """The per-chunk geometry memo in the layout chunk core must be pure CSE:
     identical (boxes, tiebreak) bytes reuse the permutation, ANY byte
     difference — including tiebreak-only differences — recomputes."""
 
@@ -206,3 +207,103 @@ class TestGeometryMemo:
             assert contents[start:start + 6] == [f"{doc}w{j}" for j in p]
             assert blocks[start:start + 6] == list(b[p])
             assert lines[start:start + 6] == list(l[p])
+
+    def test_memo_byte_budget_clears_and_matches_direct(self, monkeypatch):
+        """A budget smaller than two pages' keys forces clears mid-chunk:
+        the repeated grid is recomputed after the scatter page evicts it,
+        and every doc's order still equals direct page_reading_order."""
+        import numpy as np
+
+        from autoextract.operators import layout
+
+        grid = [(40.0 + 70.0 * (i % 3), 40.0 + 32.0 * (i // 3),
+                 100.0 + 70.0 * (i % 3), 52.0 + 32.0 * (i // 3))
+                for i in range(7)]
+        scatter = [(10.0 * i, 500.0 - 13.0 * i, 10.0 * i + 40.0,
+                    512.0 - 13.0 * i) for i in range(5)]
+        layouts = [
+            ("d1", grid, list(range(7))),
+            ("d2", grid, list(range(7))),
+            ("d3", scatter, list(range(5))),
+            ("d4", grid, list(range(7))),
+        ]
+        direct = layout.page_reading_order
+        calls = []
+
+        def counted(boxes, tiebreak=None):
+            calls.append(len(boxes))
+            return direct(boxes, tiebreak=tiebreak)
+
+        monkeypatch.setattr(layout, "page_reading_order", counted)
+        layout._spans_chunk_arrow(self._chunk(layouts))
+        assert calls == [7, 5]  # default budget: the grid is computed once
+
+        # grid key 7*32 + 7*4 = 252 B, scatter key 5*32 + 5*4 = 180 B
+        monkeypatch.setattr(layout, "MEMO_BYTES", 300)
+        calls.clear()
+        out = layout._order_chunk_arrow(self._chunk(layouts))
+        assert calls == [7, 5, 7]
+        contents = out.column("content").to_pylist()
+        blocks = out.column("block_id").to_pylist()
+        lines = out.column("line_id").to_pylist()
+        start = 0
+        for doc_id, boxes, seqs in layouts:
+            p, b, l = direct(np.array(boxes, dtype=np.float64),
+                             tiebreak=np.array(seqs))
+            end = start + len(boxes)
+            assert contents[start:end] == [f"{doc_id}w{seqs[j]}" for j in p]
+            assert blocks[start:end] == b[p].tolist()
+            assert lines[start:end] == l[p].tolist()
+            start = end
+
+
+def _large_page(shape: str, seed: int) -> tuple[np.ndarray, np.ndarray]:
+    """A page of 4,097–6,000 boxes, beyond the pure-Python twin's cutoff.
+
+    ``text``: jittered words in two or three columns of lines; ``grid``:
+    integer cells with exact coordinate ties and ~10% duplicated boxes;
+    ``scatter``: uniform random boxes. Tiebreaks are a shuffled range."""
+    rng = np.random.default_rng(seed)
+    n = int(rng.integers(4097, 6001))
+    if shape == "text":
+        ncol = int(rng.integers(2, 4))
+        col = rng.integers(0, ncol, n)
+        line = rng.integers(0, n // (ncol * 12) + 1, n)
+        x0 = col * 900.0 + rng.integers(0, 700, n) + rng.random(n)
+        y0 = line * 30.0 + rng.normal(0.0, 2.0, n)
+        boxes = np.stack([x0, y0, x0 + rng.integers(20, 120, n),
+                          y0 + rng.integers(18, 24, n)], axis=1)
+    elif shape == "grid":
+        # a wider gap after every 10th row and 15th column: xy-cut blocks
+        cx = rng.integers(0, 60, n)
+        cy = rng.integers(0, 150, n)
+        x0 = (cx * 50 + cx // 15 * 40).astype(np.float64)
+        y0 = (cy * 20 + cy // 10 * 15).astype(np.float64)
+        boxes = np.stack([x0, y0, x0 + 40, y0 + 12], axis=1)
+        dup = rng.choice(n, n // 10, replace=False)
+        boxes[dup] = boxes[rng.choice(n, n // 10)]
+    else:
+        x0 = rng.random(n) * 3000
+        y0 = rng.random(n) * 60000
+        boxes = np.stack([x0, y0, x0 + rng.random(n) * 90 + 5,
+                          y0 + rng.random(n) * 10 + 5], axis=1)
+    return boxes, rng.permutation(n)
+
+
+class TestLargePageTwin:
+    """``page_reading_order`` switches from the pure-Python twin to the NumPy
+    ``xy_cut``/``cluster_lines`` path above 4,096 boxes; both must produce
+    the same (perm, block_id, line_id) on such pages."""
+
+    @pytest.mark.parametrize("seed", range(4))
+    @pytest.mark.parametrize("shape", ["text", "grid", "scatter"])
+    def test_numpy_path_equals_python_twin(self, shape, seed):
+        boxes, tb = _large_page(shape, seed)
+        assert len(boxes) > 4096
+        perm, block_id, line_id = layout.page_reading_order(boxes, tiebreak=tb)
+        p, b, ln = layout._page_reading_order_py(
+            *(boxes[:, k].tolist() for k in range(4)), tb.tolist()
+        )
+        assert perm.tolist() == p
+        assert block_id.tolist() == b
+        assert line_id.tolist() == ln
