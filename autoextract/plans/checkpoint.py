@@ -20,6 +20,13 @@ the engine replaces it with *bucket*-granular bookkeeping:
 The checkpoint and lineage stores are append-only parquet directories — the
 analogue of the reference's jobs table (``database.py:288-318``) without
 in-place mutation (S10 is explicitly *not* carried over, SURVEY.md §2.1).
+They are a snapshot set: a bookkeeping call is a small driver-side file
+operation, never a Spark job. An append writes its rows as one parquet file
+under a dot-prefixed temp name, then ``os.replace``s it to
+``part-<uuid>.parquet`` — atomic on the local filesystem the store assumes.
+Spark and pyarrow both skip names starting with ``.`` or ``_``, so a kill
+mid-append leaves only an ignored temp file, and directories that earlier
+runs wrote with Spark (``_SUCCESS``, ``.crc``) read unchanged.
 """
 
 from __future__ import annotations
@@ -31,6 +38,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 CHECKPOINT_SCHEMA = T.StructType(
     [
@@ -79,14 +87,17 @@ class CheckpointStore:
         return self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.ckpt_dir)
 
     def done_buckets(self, stage: str) -> set[int]:
-        rows = (
-            self.read()
-            .where((F.col("stage") == stage) & (F.col("status") == "done"))
-            .select("bucket")
-            .distinct()
-            .collect()
+        if not os.path.isdir(self.ckpt_dir):
+            return set()
+        import pyarrow.dataset as ds
+
+        table = ds.dataset(
+            self.ckpt_dir, schema=to_arrow_schema(CHECKPOINT_SCHEMA), format="parquet"
+        ).to_table(
+            columns=["bucket"],
+            filter=(ds.field("stage") == stage) & (ds.field("status") == "done"),
         )
-        return {r["bucket"] for r in rows}
+        return set(table.column("bucket").to_pylist())
 
     def mark_done(
         self, run_id: str, stage: str, bucket_rows: dict[int, int], wall_ms: int
@@ -96,8 +107,7 @@ class CheckpointStore:
             (run_id, stage, int(b), "done", int(n), int(wall_ms), seq)
             for b, n in sorted(bucket_rows.items())
         ]
-        df = self.spark.createDataFrame(rows, schema=CHECKPOINT_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(self.ckpt_dir)
+        _append(self.ckpt_dir, CHECKPOINT_SCHEMA, rows)
 
     # -- lineage -------------------------------------------------------
     def read_lineage(self) -> DataFrame:
@@ -115,21 +125,32 @@ class CheckpointStore:
         buckets_processed: int,
         wall_ms: int,
     ) -> None:
-        df = self.spark.createDataFrame(
-            [
-                (
-                    run_id,
-                    stage,
-                    int(input_rows),
-                    int(output_rows),
-                    int(n_buckets),
-                    int(buckets_processed),
-                    int(wall_ms),
-                )
-            ],
-            schema=LINEAGE_SCHEMA,
+        row = (
+            run_id,
+            stage,
+            int(input_rows),
+            int(output_rows),
+            int(n_buckets),
+            int(buckets_processed),
+            int(wall_ms),
         )
-        df.coalesce(1).write.mode("append").parquet(self.lineage_dir)
+        _append(self.lineage_dir, LINEAGE_SCHEMA, [row])
+
+
+def _append(directory: str, schema: T.StructType, rows: list[tuple]) -> None:
+    """Commit ``rows`` as one new parquet file: write a dot-prefixed temp
+    file (invisible to readers), then atomically rename it into place."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(directory, exist_ok=True)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(directory, f".{name}.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(directory, name))
 
 
 def new_run_id() -> str:

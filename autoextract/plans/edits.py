@@ -87,7 +87,9 @@ def merge_reextract(
     staging = os.path.join(out_dir, f".extracted_staging_{token}")
     (
         kept.unionByName(fresh.select(*kept.columns))
-        .repartition(max(len(affected), 1), "bucket")
+        # count-free: each bucket hashes to one shuffle partition, so AQE
+        # sizes the write and every staged bucket dir still gets one file
+        .repartition("bucket")
         .sortWithinPartitions("doc_id")
         .write.mode("overwrite")
         .partitionBy("bucket")

@@ -16,11 +16,16 @@ overwrite, then commits the checkpoint — kill + rerun converges to the clean
 result (north_rule resumability).
 
 Scale notes:
-  * the only wide operations are the layout groupBy(doc_id,page), the global
-    offset window and the final write repartition — all keyed on doc_id, so
-    AQE + range partitioning keep them balanced;
-  * mega-document skew is defused structurally: layout parallelizes per page,
-    and bucket counts are configurable so one bucket ≈ one comfortable task.
+  * each written stage has two wide operations, both keyed on doc_id: the
+    kernel's count-free ``repartition(doc_id)`` (``spans_table``,
+    ``strip_html``'s grouping, ``extract_fields``) and the write's count-free
+    ``repartition(bucket)``. Neither names a partition count; AQE coalesces
+    each by shuffle bytes, so a small run is a few tasks, not 32;
+  * the write keeps one data file per ``bucket=`` directory: hash
+    partitioning puts a bucket in exactly one shuffle partition and AQE only
+    merges whole partitions, so one task writes each bucket;
+  * checkpoint bookkeeping is driver-side file I/O (``plans.checkpoint``):
+    a no-op rerun over finished output runs no Spark job.
 """
 
 from __future__ import annotations
@@ -30,7 +35,7 @@ import time
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import extract_fields
@@ -89,27 +94,52 @@ def _run_stage(
     if not pending:
         return RunResult(run_id, stage, 0, 0, 0)
 
-    todo = (
-        with_bucket(source, n_buckets)
-        .where(F.col("bucket").isin(pending))
-        .drop("bucket")
-    )
-    # free-riding metrics: observed during the write job itself — per-bucket
-    # output counts come from an Observation on the written plan, NOT a
-    # re-scan of the just-written parquet (which would double the stage's
-    # read volume at scale; VERDICT r1 "What's wrong" #3)
-    from pyspark.sql import Observation
-
     obs_in = Observation()
-    todo = todo.observe(obs_in, F.count(F.lit(1)).alias("input_rows"))
-    out = with_bucket(transform(todo), n_buckets)
-    obs_out = Observation()
-    out = out.observe(obs_out, *_bucket_count_aggs(pending))
+    todo = _pending_rows(source, n_buckets, pending).observe(
+        obs_in, F.count(F.lit(1)).alias("input_rows")
+    )
     data_dir = os.path.join(out_dir, table)
-    # one task per pending bucket → one file per partition dir, not
-    # #tasks × #buckets fragments (file-count hygiene at 10^12 scale)
+    return _write_and_commit(
+        store, transform(todo), data_dir, stage, run_id, pending, n_buckets, obs_in, t0
+    )
+
+
+def _pending_rows(source: DataFrame, n_buckets: int, pending: list[int]) -> DataFrame:
+    """The rows of ``source`` whose bucket is pending (the reference's F3
+    pending filter as one IN predicate)."""
+    keep = F.expr(f"bucket IN ({', '.join(map(str, pending))})")
+    return with_bucket(source, n_buckets).where(keep).drop("bucket")
+
+
+def _write_and_commit(
+    store: CheckpointStore,
+    out: DataFrame,
+    data_dir: str,
+    stage: str,
+    run_id: str,
+    pending: list[int],
+    n_buckets: int,
+    obs_in: Observation,
+    t0: float,
+) -> RunResult:
+    """Write ``out`` partitioned by bucket, then commit its checkpoint and
+    lineage rows.
+
+    Per-bucket output counts are observed during the write job itself as
+    one ``array(count_if(bucket = b), …)`` aggregate — no re-scan of the
+    written parquet and one expression however many buckets are pending
+    (``count_if`` over an empty bucket is 0, so empty buckets still
+    checkpoint as done). The count-free ``repartition("bucket")`` lets AQE
+    size the write: hash partitioning puts each bucket in exactly one
+    shuffle partition and AQE merges only whole partitions, so every
+    ``bucket=`` directory receives one file.
+    """
+    obs_out = Observation()
+    out = with_bucket(out, n_buckets)
+    counts_expr = ", ".join(f"count_if(bucket = {b})" for b in pending)
+    out = out.observe(obs_out, F.expr(f"array({counts_expr})").alias("bucket_rows"))
     (
-        out.repartition(max(len(pending), 1), "bucket")
+        out.repartition("bucket")
         .sortWithinPartitions("doc_id")
         .write.mode("overwrite")
         # per-writer so resume survives a default-configured session
@@ -118,8 +148,7 @@ def _run_stage(
         .partitionBy("bucket")
         .parquet(data_dir)
     )
-
-    counts = _bucket_counts_from_observation(obs_out, pending)
+    counts = dict(zip(pending, obs_out.get["bucket_rows"]))
     wall_ms = int((time.monotonic() - t0) * 1000)
     store.mark_done(run_id, stage, counts, wall_ms)
     rows = sum(counts.values())
@@ -131,21 +160,6 @@ def _run_stage(
         run_id, stage, input_rows, rows, n_buckets, len(pending), wall_ms
     )
     return RunResult(run_id, stage, len(pending), rows, wall_ms)
-
-
-def _bucket_count_aggs(pending: list[int]):
-    """Per-bucket row counts as Observation aggregates — collected during the
-    write job itself (zero extra scans; bucket counts are bounded by the
-    configured n_buckets, so the expression list stays small)."""
-    return [
-        F.sum((F.col("bucket") == b).cast("long")).alias(f"b{b}") for b in pending
-    ]
-
-
-def _bucket_counts_from_observation(obs, pending: list[int]) -> dict[int, int]:
-    m = obs.get
-    # empty buckets still checkpoint as done (sum over no rows → null)
-    return {b: int(m.get(f"b{b}") or 0) for b in pending}
 
 
 def run_spans_job(
@@ -254,17 +268,10 @@ def run_full_job(
             RunResult(run_id, EXTRACT_STAGE, 0, 0, 0),
         )
 
-    from pyspark.sql import Observation
-
     pending = sorted(pend_s)
-    todo = (
-        with_bucket(words, n_buckets)
-        .where(F.col("bucket").isin(pending))
-        .drop("bucket")
-    )
     obs_in = Observation()
     ordered = (
-        order_words(todo)
+        order_words(_pending_rows(words, n_buckets, pending))
         .observe(obs_in, F.count(F.lit(1)).alias("input_rows"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -275,31 +282,19 @@ def run_full_job(
             (EXTRACT_STAGE, "extracted", lambda df: extract_fields(df, schema)),
         ):
             t0 = time.monotonic()  # per stage, not cumulative
-            obs_out = Observation()
-            out = with_bucket(transform(ordered), n_buckets).observe(
-                obs_out, *_bucket_count_aggs(pending)
+            results.append(
+                _write_and_commit(
+                    store,
+                    transform(ordered),
+                    os.path.join(out_dir, table),
+                    stage,
+                    run_id,
+                    pending,
+                    n_buckets,
+                    obs_in,
+                    t0,
+                )
             )
-            data_dir = os.path.join(out_dir, table)
-            (
-                out.repartition(max(len(pending), 1), "bucket")
-                .sortWithinPartitions("doc_id")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(data_dir)
-            )
-            counts = _bucket_counts_from_observation(obs_out, pending)
-            wall_ms = int((time.monotonic() - t0) * 1000)
-            store.mark_done(run_id, stage, counts, wall_ms)
-            rows = sum(counts.values())
-            try:
-                input_rows = int(obs_in.get["input_rows"])
-            except Exception:  # pragma: no cover
-                input_rows = rows
-            store.append_lineage(
-                run_id, stage, input_rows, rows, n_buckets, len(pending), wall_ms
-            )
-            results.append(RunResult(run_id, stage, len(pending), rows, wall_ms))
     finally:
         ordered.unpersist()
     return results[0], results[1]
