@@ -474,10 +474,6 @@ HTML_FIXTURE = """<!DOCTYPE html>
 </body></html>"""
 
 
-def html_fixture_pdf() -> pd.DataFrame:
-    return pd.DataFrame([{"doc_id": HTML_DOC_ID, "html": HTML_FIXTURE}])
-
-
 _HTML_TOPICS = [
     ("distributed systems", "Consensus protocols coordinate replicas."),
     ("query optimization", "Cost models guide join ordering decisions."),

@@ -43,38 +43,37 @@ NumPy mask selection — no nested Python loops over the word list (a 10^5-word
 document costs O(hits·n) vectorized ops, not O(specs·n^2) Python
 comparisons).
 
-Executed as one ``applyInPandas`` grouped by ``doc_id`` (the reference also
-extracts per document). The kernel is NumPy/pandas over one doc's words —
-vectorized per Arrow batch, no per-row Python at the Spark level.
+Executed as one ``mapInArrow`` pass over doc_id-clustered, word-sorted
+partitions (the reference also extracts per document): the shared
+``_docwise.per_doc`` loop hands the kernel whole Arrow chunks of complete
+documents, each column becomes NumPy once per chunk, and each document is a
+slice of those arrays — no pandas and no per-group Python call at the Spark
+level.
 """
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..schema import AppSchema, FieldSpec
+from ..schema import AppSchema
+from ._docwise import doc_bounds, per_doc
 
 SEPARATORS = ("：", ":")
+
+#: the per-word columns ``_extract_one_doc`` reads
+_WORD_COLUMNS = (
+    "page", "kind", "content", "word_id", "x0", "y0", "x1", "y1", "block_id", "line_id",
+)
 
 #: long-format output (FIXTURES.md §5)
 EXTRACTED_SCHEMA = (
     "doc_id string, field_path string, value string, "
     "word_ids array<int>, confidence double"
 )
-
-
-def _split_inline(content: str, label: str) -> str | None:
-    """'<label><sep><value>' → value, else None."""
-    if not content.startswith(label):
-        return None
-    rest = content[len(label) :]
-    for sep in SEPARATORS:
-        if rest.startswith(sep):
-            return rest[len(sep) :].strip()
-    return None
 
 
 def _nearest_value_word(
@@ -111,21 +110,34 @@ def _nearest_value_word(
     return None
 
 
-def _extract_one_doc(words: pd.DataFrame, schema: AppSchema) -> list[dict]:
-    """Kernel: one document's ordered words → long-format field rows."""
-    words = words.sort_values("word_id", kind="stable").reset_index(drop=True)
-    text_mask = words["kind"].to_numpy() == "text"
-    contents = words["content"].to_numpy(dtype=object)
-    word_ids = words["word_id"].to_numpy()
-    x0 = words["x0"].to_numpy()
-    x1 = words["x1"].to_numpy()
-    y0 = words["y0"].to_numpy()
-    y1 = words["y1"].to_numpy()
-    line_codes = pd.MultiIndex.from_arrays(
-        [words["page"], words["block_id"], words["line_id"]]
-    ).factorize()[0]
+def _line_codes(page: np.ndarray, block_id: np.ndarray, line_id: np.ndarray) -> np.ndarray:
+    """One integer per word, equal exactly for words on the same
+    (page, block_id, line_id) line: one lexsort plus a diff."""
+    keys = np.stack([page, block_id, line_id])
+    order = np.lexsort(keys[::-1])
+    ordered = keys[:, order]
+    new_line = np.ones(len(order), dtype=bool)
+    new_line[1:] = (ordered[:, 1:] != ordered[:, :-1]).any(axis=0)
+    codes = np.empty(len(order), dtype=np.int64)
+    codes[order] = np.cumsum(new_line) - 1
+    return codes
 
-    n = len(words)
+
+def _extract_one_doc(words: dict[str, np.ndarray], schema: AppSchema) -> list[dict]:
+    """Kernel: one document's ordered words → long-format field rows.
+
+    ``words`` maps each ``extract_fields`` input column to a NumPy array
+    over the document's rows, which must be sorted by ``word_id``."""
+    text_mask = words["kind"] == "text"
+    contents = words["content"]
+    word_ids = words["word_id"]
+    x0 = words["x0"]
+    x1 = words["x1"]
+    y0 = words["y0"]
+    y1 = words["y1"]
+    line_codes = _line_codes(words["page"], words["block_id"], words["line_id"])
+
+    n = len(word_ids)
     consumed = np.zeros(n, dtype=bool)
     consumed |= ~text_mask  # media spans never participate in KV matching
     rows: list[dict] = []
@@ -306,56 +318,35 @@ def extract_fields(ordered_words: DataFrame, schema: AppSchema) -> DataFrame:
 
     Scale shape mirrors ``order_words``: one count-free repartition on
     doc_id (AQE coalesces its task count by shuffle bytes), rows sorted
-    within partitions, and a single ``mapInPandas`` pass that walks
-    document boundaries — one Python call per partition rather than one
-    ``applyInPandas`` group call per document (which costs ~1 ms/doc of
-    pandas overhead × 10^12 docs at the design point).
+    within partitions by (doc_id, word_id) — the order ``_extract_one_doc``
+    requires — and a single ``mapInArrow`` pass that walks document
+    boundaries: one Python call per partition, not one per document.
     """
-    schema_json = schema.to_json()
-    schema_name = schema.name
-    needed = [
-        "doc_id", "page", "kind", "content", "word_id",
-        "x0", "y0", "x1", "y1", "block_id", "line_id",
-    ]
 
-    def kernel(batches):
-        app = AppSchema.from_json(schema_json, name=schema_name)
-        cols = ["doc_id", "field_path", "value", "word_ids", "confidence"]
-        leftover: pd.DataFrame | None = None
+    def extract_chunk(tbl):
+        import pyarrow as pa
 
-        def process(pdf: pd.DataFrame):
-            out: list[dict] = []
-            ids = pdf["doc_id"].to_numpy(dtype=object)
-            starts = np.concatenate(
-                ([0], np.flatnonzero(ids[1:] != ids[:-1]) + 1, [len(ids)])
-            )
-            for lo, hi in zip(starts[:-1], starts[1:]):
-                grp = pdf.iloc[lo:hi]
-                for row in _extract_one_doc(grp, app):
-                    row["doc_id"] = ids[lo]
-                    out.append(row)
-            return pd.DataFrame(out, columns=cols)
-
-        for pdf in batches:
-            if leftover is not None:
-                pdf = pd.concat([leftover, pdf], ignore_index=True)
-                leftover = None
-            if len(pdf) == 0:
-                continue
-            ids = pdf["doc_id"].to_numpy(dtype=object)
-            tail = ids != ids[-1]
-            cut = int(np.flatnonzero(tail).max() + 1) if tail.any() else 0
-            if cut > 0:
-                yield process(pdf.iloc[:cut])
-            leftover = pdf.iloc[cut:].reset_index(drop=True)
-        if leftover is not None and len(leftover):
-            yield process(leftover)
+        bounds = doc_bounds(tbl)
+        cols = {c: tbl.column(c).to_numpy(zero_copy_only=False) for c in _WORD_COLUMNS}
+        rows: list[dict] = []
+        doc_rows: list[int] = []
+        for lo, hi in zip(bounds[:-1], bounds[1:]):
+            doc = _extract_one_doc({c: a[lo:hi] for c, a in cols.items()}, schema)
+            rows.extend(doc)
+            doc_rows.extend([lo] * len(doc))
+        return pa.table({
+            "doc_id": tbl.column("doc_id").take(pa.array(doc_rows, type=pa.int64())),
+            "field_path": pa.array([r["field_path"] for r in rows], pa.string()),
+            "value": pa.array([r["value"] for r in rows], pa.string()),
+            "word_ids": pa.array([r["word_ids"] for r in rows], pa.list_(pa.int32())),
+            "confidence": pa.array([r["confidence"] for r in rows], pa.float64()),
+        })
 
     return (
-        ordered_words.select(*needed)
+        ordered_words.select("doc_id", *_WORD_COLUMNS)
         .repartition("doc_id")
         .sortWithinPartitions("doc_id", "word_id")
-        .mapInPandas(kernel, schema=EXTRACTED_SCHEMA)
+        .mapInArrow(per_doc(extract_chunk), schema=EXTRACTED_SCHEMA)
     )
 
 
@@ -372,6 +363,41 @@ def typed_nested_result(extracted: DataFrame, schema: AppSchema) -> DataFrame:
     )
 
 
+def _fill(fields: list[dict], vnode: dict, inode: dict, prefix: str, by_path: dict) -> None:
+    """Write one document's ``field_path → (value, word_ids)`` rows into the
+    schema's value and indices templates, in place."""
+    for f in fields:
+        ftype = f.get("type", "string")
+        path = f"{prefix}{f['name']}"
+        if ftype == "string":
+            v, ids = by_path.get(path, ("", []))
+            vnode[f["name"]] = v
+            inode[f["name"]] = ids
+        elif ftype == "map":
+            _fill(f.get("fields", []), vnode[f["name"]], inode[f["name"]], path + ".", by_path)
+        elif ftype == "list":
+            item_fields = f.get("items", {}).get("fields", [])
+            vitems, iitems = [], []
+            i = 0
+            while True:
+                keys = [f"{path}[{i}].{c['name']}" for c in item_fields]
+                if not any(k in by_path for k in keys):
+                    break
+                vit, iit = {}, {}
+                for c in item_fields:
+                    v, ids = by_path.get(f"{path}[{i}].{c['name']}", ("", []))
+                    vit[c["name"]] = v
+                    iit[c["name"]] = ids
+                vitems.append(vit)
+                iitems.append(iit)
+                i += 1
+            if not vitems:  # template keeps one empty item
+                vitems = vnode[f["name"]]
+                iitems = inode[f["name"]]
+            vnode[f["name"]] = vitems
+            inode[f["name"]] = iitems
+
+
 def nested_result(extracted: DataFrame, schema: AppSchema) -> DataFrame:
     """Long format → one row per doc with ``extracted_json`` +
     ``indices_json`` — the reference's unified output shape
@@ -381,90 +407,37 @@ def nested_result(extracted: DataFrame, schema: AppSchema) -> DataFrame:
     wanting typed columns apply ``from_json`` with a derived StructType.
 
     Scale shape: count-free repartition on doc_id + sortWithinPartitions +
-    ONE ``mapInPandas`` pass per partition (pandas groupby in the kernel) —
-    not ``groupBy().applyInPandas``, whose ~1 ms/group pandas overhead is
-    real money at 10^12 docs (same reasoning as ``extract_fields``).
+    ONE ``mapInArrow`` pass per partition over the shared ``per_doc`` loop —
+    not ``groupBy().applyInPandas``, whose per-group call overhead is real
+    money at 10^12 docs (same reasoning as ``extract_fields``).
     """
-    schema_json = schema.to_json()
 
-    out_schema = "doc_id string, extracted_json string, indices_json string"
+    def nested_chunk(tbl):
+        import pyarrow as pa
 
-    def chunk_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        import json
-
-        app = AppSchema.from_json(schema_json)
-        rows = []
-        for doc_id, grp in pdf.groupby("doc_id", sort=True):
-            values = app.unified_template()
-            indices = app.indices_template()
-            by_path = {
-                r.field_path: (r.value, [int(w) for w in r.word_ids])
-                for r in grp.itertuples()
-            }
-
-            def fill(fields: list[dict], vnode: dict, inode: dict, prefix: str) -> None:
-                for f in fields:
-                    ftype = f.get("type", "string")
-                    path = f"{prefix}{f['name']}"
-                    if ftype == "string":
-                        v, ids = by_path.get(path, ("", []))
-                        vnode[f["name"]] = v
-                        inode[f["name"]] = ids
-                    elif ftype == "map":
-                        fill(f.get("fields", []), vnode[f["name"]], inode[f["name"]], path + ".")
-                    elif ftype == "list":
-                        item_fields = f.get("items", {}).get("fields", [])
-                        vitems, iitems = [], []
-                        i = 0
-                        while True:
-                            keys = [f"{path}[{i}].{c['name']}" for c in item_fields]
-                            if not any(k in by_path for k in keys):
-                                break
-                            vit, iit = {}, {}
-                            for c in item_fields:
-                                v, ids = by_path.get(f"{path}[{i}].{c['name']}", ("", []))
-                                vit[c["name"]] = v
-                                iit[c["name"]] = ids
-                            vitems.append(vit)
-                            iitems.append(iit)
-                            i += 1
-                        if not vitems:  # template keeps one empty item
-                            vitems = vnode[f["name"]]
-                            iitems = inode[f["name"]]
-                        vnode[f["name"]] = vitems
-                        inode[f["name"]] = iitems
-
-            fill(app.fields, values, indices, "")
-            rows.append(
-                {
-                    "doc_id": doc_id,
-                    "extracted_json": json.dumps(values, ensure_ascii=False, sort_keys=True),
-                    "indices_json": json.dumps(indices, ensure_ascii=False, sort_keys=True),
-                }
-            )
-        return pd.DataFrame(rows, columns=["doc_id", "extracted_json", "indices_json"])
-
-    def kernel(batches):
-        # doc-boundary buffering: a document's rows never split across two
-        # chunk_kernel calls (rows arrive sorted by doc_id within partition)
-        leftover: pd.DataFrame | None = None
-        for pdf in batches:
-            if leftover is not None:
-                pdf = pd.concat([leftover, pdf], ignore_index=True)
-                leftover = None
-            if len(pdf) == 0:
-                continue
-            ids = pdf["doc_id"].to_numpy(dtype=object)
-            tail = ids != ids[-1]
-            cut = int(np.flatnonzero(tail).max() + 1) if tail.any() else 0
-            if cut > 0:
-                yield chunk_kernel(pdf.iloc[:cut])
-            leftover = pdf.iloc[cut:].reset_index(drop=True)
-        if leftover is not None and len(leftover):
-            yield chunk_kernel(leftover)
+        bounds = doc_bounds(tbl)
+        paths = tbl.column("field_path").to_pylist()
+        values = tbl.column("value").to_pylist()
+        word_ids = tbl.column("word_ids").to_pylist()
+        extracted_json, indices_json = [], []
+        for lo, hi in zip(bounds[:-1], bounds[1:]):
+            by_path = {paths[i]: (values[i], word_ids[i]) for i in range(lo, hi)}
+            vals = schema.unified_template()
+            indices = schema.indices_template()
+            _fill(schema.fields, vals, indices, "", by_path)
+            extracted_json.append(json.dumps(vals, ensure_ascii=False, sort_keys=True))
+            indices_json.append(json.dumps(indices, ensure_ascii=False, sort_keys=True))
+        return pa.table({
+            "doc_id": tbl.column("doc_id").take(pa.array(bounds[:-1])),
+            "extracted_json": pa.array(extracted_json, pa.string()),
+            "indices_json": pa.array(indices_json, pa.string()),
+        })
 
     return (
         extracted.repartition("doc_id")
         .sortWithinPartitions("doc_id")
-        .mapInPandas(kernel, schema=out_schema)
+        .mapInArrow(
+            per_doc(nested_chunk),
+            schema="doc_id string, extracted_json string, indices_json string",
+        )
     )

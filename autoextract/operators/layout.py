@@ -35,6 +35,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._docwise import doc_bounds, per_doc
+
 # Gap thresholds, in units of the page's median box height (the only robust
 # scale available without page dimensions). Deterministic constants — never
 # data-dependent randomness.
@@ -401,37 +403,29 @@ def _layout_chunk(tbl):
     """Reading order for an Arrow table of COMPLETE documents sorted by
     (doc_id, page, word_seq) — or one page of one document.
 
-    Returns ``(perm, seq, word_id, block_id, line_id, doc_bounds)``: ``perm``
+    Returns ``(perm, seq, word_id, block_id, line_id, bounds)``: ``perm``
     takes the input rows to reading order, the next four are aligned with
-    the permuted rows, and ``doc_bounds`` holds each document's first row
-    plus the row count. Geometry and ids come out as zero-copy numpy and
+    the permuted rows, and ``bounds`` holds each document's first row plus
+    the row count. Geometry and ids come out as zero-copy numpy and
     group bounds from pyarrow compute; the per-page ``page_reading_order``
     calls are the only Python-level loop.
     """
-    import pyarrow.compute as pc
-
     n = tbl.num_rows
     pages = tbl.column("page").to_numpy()
     seqs = tbl.column("word_seq").to_numpy()
     boxes = np.stack(
         [tbl.column(c).to_numpy() for c in ("x0", "y0", "x1", "y1")], axis=1
     )
-    ids = tbl.column("doc_id")
-    id_change = np.flatnonzero(
-        np.invert(
-            pc.equal(ids.slice(1), ids.slice(0, n - 1)).to_numpy(zero_copy_only=False)
-        )
-    ) + 1
+    bounds = doc_bounds(tbl)
     page_change = np.flatnonzero(pages[1:] != pages[:-1]) + 1
-    changed = np.union1d(id_change, page_change)
+    changed = np.union1d(bounds[1:-1], page_change)
     starts = np.concatenate(([0], changed))
     ends = np.concatenate((changed, [n]))
-    doc_bounds = np.concatenate(([0], id_change, [n]))
     # row position within its page / its document, in reading order too
     # (perm only permutes within a page)
     rows = np.arange(n, dtype=np.int32)
     seq = rows - np.repeat(starts, ends - starts).astype(np.int32)
-    word_id = rows - np.repeat(doc_bounds[:-1], np.diff(doc_bounds)).astype(np.int32)
+    word_id = rows - np.repeat(bounds[:-1], np.diff(bounds)).astype(np.int32)
 
     perm = np.empty(n, dtype=np.int64)
     block_id = np.empty(n, dtype=np.int32)
@@ -462,7 +456,7 @@ def _layout_chunk(tbl):
         perm[lo:hi] = p + lo
         block_id[lo:hi] = bp
         line_id[lo:hi] = lp
-    return perm, seq, word_id, block_id, line_id, doc_bounds
+    return perm, seq, word_id, block_id, line_id, bounds
 
 
 def _order_chunk_arrow(tbl):
@@ -488,7 +482,7 @@ def _spans_chunk_arrow(tbl):
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    perm, _, word_id, _, _, doc_bounds = _layout_chunk(tbl)
+    perm, _, word_id, _, _, bounds = _layout_chunk(tbl)
     taken = tbl.take(pa.array(perm))
     kind = taken.column("kind").combine_chunks()
     is_text = pc.equal(kind, "text")
@@ -504,44 +498,10 @@ def _spans_chunk_arrow(tbl):
         names=["kind", "text", "media_ref", "offset"],
     )
     spans = pa.ListArray.from_arrays(
-        pa.array(doc_bounds, type=pa.int32()), struct
+        pa.array(bounds, type=pa.int32()), struct
     )
-    doc_ids = tbl.column("doc_id").take(pa.array(doc_bounds[:-1]))
+    doc_ids = tbl.column("doc_id").take(pa.array(bounds[:-1]))
     return pa.table({"doc_id": doc_ids, "spans": spans})
-
-
-def _per_doc(build):
-    """``mapInArrow`` kernel running ``build`` over a ``_doc_sorted``
-    partition. Arrow batches may split a document, so the tail document is
-    buffered until the doc_id changes; ``build`` only ever sees complete
-    documents. One Python call per partition, not per group."""
-
-    def kernel(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        leftover = None
-        for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            if leftover is not None:
-                tbl = pa.concat_tables([leftover, tbl]).combine_chunks()
-                leftover = None
-            n = tbl.num_rows
-            if n == 0:
-                continue
-            ids = tbl.column("doc_id")
-            not_last = np.invert(
-                pc.equal(ids, ids.slice(n - 1, 1)[0]).to_numpy(zero_copy_only=False)
-            )
-            cut = int(np.flatnonzero(not_last).max() + 1) if not_last.any() else 0
-            if cut > 0:
-                yield from build(tbl.slice(0, cut)).to_batches()
-            leftover = tbl.slice(cut)
-        if leftover is not None and leftover.num_rows:
-            yield from build(leftover.combine_chunks()).to_batches()
-
-    kernel.__name__ = build.__name__  # names the MapInArrow node in plans
-    return kernel
 
 
 def _order_page_arrow(page):
@@ -569,7 +529,7 @@ def order_words(ocr_words: DataFrame) -> DataFrame:
     ``order_words_paged`` (page-parallel variant) below.
     """
     return _doc_sorted(ocr_words).mapInArrow(
-        _per_doc(_order_chunk_arrow), schema=ORDERED_SCHEMA
+        per_doc(_order_chunk_arrow), schema=ORDERED_SCHEMA
     )
 
 
@@ -598,7 +558,7 @@ def order_words_auto(
     normal = (
         tagged.where(F.col("__doc_n") <= mega_threshold)
         .drop("__doc_n")
-        .mapInArrow(_per_doc(_order_chunk_arrow), schema=ORDERED_SCHEMA)
+        .mapInArrow(per_doc(_order_chunk_arrow), schema=ORDERED_SCHEMA)
     )
     mega = order_words_paged(
         tagged.where(F.col("__doc_n") > mega_threshold).drop("__doc_n"),
@@ -637,7 +597,7 @@ def spans_table(ocr_words: DataFrame) -> DataFrame:
     prefer this form in pipelines that don't also need the word-level table.
     """
     return _doc_sorted(ocr_words).mapInArrow(
-        _per_doc(_spans_chunk_arrow), schema=SPANS_TABLE_SCHEMA
+        per_doc(_spans_chunk_arrow), schema=SPANS_TABLE_SCHEMA
     )
 
 

@@ -1,10 +1,11 @@
 """Span-pipeline results must not depend on engine configuration.
 
-``spans_table``, ``order_words`` and ``extract_fields`` repartition on
-doc_id without a partition count, so the number and size of their kernel
-tasks follow AQE, the shuffle-partition conf and the Arrow batch size. Each
-perturbation below must reproduce the default run's output exactly (the
-span table, the full ``order_words`` rows and the extracted fields):
+``spans_table``, ``order_words``, ``extract_fields`` and ``nested_result``
+repartition on doc_id without a partition count, so the number and size of
+their kernel tasks follow AQE, the shuffle-partition conf and the Arrow batch
+size. Each perturbation below must reproduce the default run's output
+exactly (the span table, the full ``order_words`` rows, the extracted fields
+and the per-document nested JSON):
 
 * ``maxRecordsPerBatch=7`` splits nearly every document across Arrow
   batches, exercising the kernels' doc-boundary buffering — the path that
@@ -21,7 +22,7 @@ from contextlib import contextmanager
 import pytest
 
 from autoextract import corpus
-from autoextract.operators.extract import extract_fields
+from autoextract.operators.extract import extract_fields, nested_result
 from autoextract.operators.layout import order_words, spans_table
 from autoextract.schema import SHIPPING_SCHEMA
 
@@ -59,26 +60,32 @@ def words(spark):
     df.unpersist()
 
 
-def _results(words) -> tuple[dict, list, list]:
+def _results(words) -> tuple[dict, list, list, list]:
     # DataFrames are built inside the caller's conf block: a count-free
     # repartition takes its initial partition count at planning time
     spans = {r.doc_id: r.spans for r in spans_table(words).collect()}
     ordered = order_words(words)
     # (doc_id, page, seq) is unique, so the sort never compares None cells
     rows = sorted(tuple(r) for r in ordered.collect())
+    extracted = extract_fields(ordered, SHIPPING_SCHEMA)
     fields = sorted(
         (r.doc_id, r.field_path, r.value, tuple(r.word_ids), r.confidence)
-        for r in extract_fields(ordered, SHIPPING_SCHEMA).collect()
+        for r in extracted.collect()
     )
-    return spans, fields, rows
+    nested = sorted(
+        (r.doc_id, r.extracted_json, r.indices_json)
+        for r in nested_result(extracted, SHIPPING_SCHEMA).collect()
+    )
+    return spans, fields, rows, nested
 
 
 @pytest.fixture(scope="module")
 def baseline(words):
-    spans, fields, rows = _results(words)
+    spans, fields, rows, nested = _results(words)
     assert len(spans) == N_DOCS and fields
     assert len({r[0] for r in rows}) == N_DOCS
-    return spans, fields, rows
+    assert len(nested) == N_DOCS
+    return spans, fields, rows, nested
 
 
 @pytest.mark.parametrize("name", sorted(PERTURBATIONS))
@@ -91,3 +98,4 @@ def test_span_pipeline_config_invariant(spark, words, baseline, name):
     assert got[0] == baseline[0]
     assert got[1] == baseline[1]
     assert got[2] == baseline[2]
+    assert got[3] == baseline[3]

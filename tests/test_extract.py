@@ -178,25 +178,23 @@ def test_typed_nested_result(spark):
 
 
 def _kernel_words(cells):
-    """Build the ordered-words frame `_extract_one_doc` consumes directly:
+    """Build the per-column NumPy arrays `_extract_one_doc` consumes directly:
     cells = [(content, x0, y0, line_id)], one block, page 1."""
-    import pandas as pd
+    import numpy as np
 
-    return pd.DataFrame(
-        {
-            "doc_id": "k-1",
-            "page": 1,
-            "kind": "text",
-            "content": [c[0] for c in cells],
-            "word_id": range(len(cells)),
-            "x0": [float(c[1]) for c in cells],
-            "y0": [float(c[2]) for c in cells],
-            "x1": [float(c[1]) + 100.0 for c in cells],
-            "y1": [float(c[2]) + 30.0 for c in cells],
-            "block_id": 0,
-            "line_id": [int(c[3]) for c in cells],
-        }
-    )
+    n = len(cells)
+    return {
+        "page": np.ones(n, dtype=np.int32),
+        "kind": np.array(["text"] * n, dtype=object),
+        "content": np.array([c[0] for c in cells], dtype=object),
+        "word_id": np.arange(n, dtype=np.int32),
+        "x0": np.array([float(c[1]) for c in cells]),
+        "y0": np.array([float(c[2]) for c in cells]),
+        "x1": np.array([float(c[1]) + 100.0 for c in cells]),
+        "y1": np.array([float(c[2]) + 30.0 for c in cells]),
+        "block_id": np.zeros(n, dtype=np.int32),
+        "line_id": np.array([int(c[3]) for c in cells], dtype=np.int32),
+    }
 
 
 def test_large_doc_bounded_time():

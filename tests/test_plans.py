@@ -136,6 +136,26 @@ def test_ocr_words_spans_single_coalesced_exchange(spark, tmp_path):
     assert "AQEShuffleRead coalesced" in p, p
 
 
+def test_extract_kernels_arrow_per_doc(spark, tmp_path):
+    """``extract_fields`` and ``nested_result`` run as named ``MapInArrow``
+    kernels over the shared ``per_doc`` loop: no pandas kernel anywhere in
+    their plans, and one doc_id exchange each on top of ``order_words``'."""
+    from autoextract import corpus
+    from autoextract.operators.extract import extract_fields, nested_result
+    from autoextract.operators.layout import order_words
+    from autoextract.schema import SHIPPING_SCHEMA
+
+    path = str(tmp_path / "ocr_words")
+    corpus.ocr_words_view(corpus.gen_corpus(spark, 20, seed=5)).write.parquet(path)
+    extracted = extract_fields(order_words(spark.read.parquet(path)), SHIPPING_SCHEMA)
+    nested = nested_result(extracted, SHIPPING_SCHEMA)
+    for df, kernel, exchanges in ((extracted, "extract_chunk", 2), (nested, "nested_chunk", 3)):
+        p = plan_str(df, "simple")
+        assert f"MapInArrow {kernel}" in p, p
+        assert "MapInPandas" not in p and "FlatMapGroupsInPandas" not in p, p
+        assert n_exchanges(p) == exchanges, p
+
+
 def test_pdf_query_filter_pushdown(spark):
     """The pdf round-trip's doc_id < 300 filter reaches the parquet scan —
     at 10^12 docs the render stage must never see unselected rows."""
