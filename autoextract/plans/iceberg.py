@@ -127,24 +127,6 @@ def create_spans_table(
     spark.sql(SPANS_DDL.format(table=table, n_buckets=n_buckets))
 
 
-def write_spans(spark: SparkSession, spans: DataFrame, table: str) -> None:
-    """Append a spans batch; Iceberg's hash distribution mode does the
-    bucket-aligned shuffle the emulation does by hand."""
-    _require(spark, table)
-    spans.writeTo(table).append()
-
-
-def merge_extracted(
-    spark: SparkSession, updates: DataFrame, table: str
-) -> None:
-    """Snapshot-atomic upsert of re-extracted fields (the production
-    ``merge_reextract``). The updates view is tiny relative to the target —
-    Iceberg prunes touched files by the bucket transform on doc_id."""
-    _require(spark, table)
-    updates.createOrReplaceTempView("_ae_merge_updates")
-    spark.sql(MERGE_EXTRACTED_SQL.format(table=table, updates="_ae_merge_updates"))
-
-
 #: single-snapshot whole-doc replacement WITHOUT a driver-side id list (r4
 #: VERDICT "what's wrong" #2: the former overwrite(isin(ids)) collected
 #: every edited doc_id to the driver — bounded for the human-edit flow but
