@@ -24,12 +24,11 @@ from collections.abc import Callable
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType
 
 from autoextract.functions import text as TX
 from autoextract.operators import dedup as DD
 from autoextract.operators import similarity as SIM
+from autoextract.operators._docwise import map_rows
 from autoextract.operators.graph import pagerank_oracle_sql
 from autoextract.operators.layout import assemble_spans, order_words, spans_table
 
@@ -60,29 +59,6 @@ def _docs(spark: SparkSession, sf_dir: str, limit: int, *cols: str) -> DataFrame
         .select(F.col("doc_id").cast("long").alias("doc_id"), *cols)
         .where(F.col("doc_id") < limit)
     )
-
-
-def _map_rows(df: DataFrame, fn: Callable[..., tuple], schema: str) -> DataFrame:
-    """Apply ``fn`` row by row in one ``mapInArrow`` stage. ``fn`` gets one
-    row's values as Python objects, in column order, and returns the output
-    row as a tuple in ``schema`` order. Every fixture renderer and verdict
-    check in this module has this shape; being per-row, none can depend on
-    where the Arrow batches are cut."""
-    arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
-
-    def kernel(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            rows = [fn(*row) for row in zip(*batch.to_pydict().values())]
-            cols = zip(*rows) if rows else [()] * len(arrow_schema)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, f.type) for c, f in zip(cols, arrow_schema)],
-                schema=arrow_schema,
-            )
-
-    kernel.__name__ = fn.__name__  # names the MapInArrow node in plans
-    return df.mapInArrow(kernel, schema)
 
 
 # ----------------------------------------------------------------------
@@ -474,7 +450,7 @@ def _q_charset_detect(spark, sf):
             p = b"\xff\xfe" + t.encode("utf-16-le") + b"\x00"
         return d, p
 
-    payloads = _map_rows(docs, render, "doc_id long, payload binary")
+    payloads = map_rows(docs, render, "doc_id long, payload binary")
     return detect_and_decode(payloads)
 
 
@@ -628,7 +604,7 @@ def _q_wiki_ingest(spark, sf):
              "text": f"#REDIRECT [[Article {d}]]"},
         ])
 
-    payloads = _map_rows(docs, render, "doc_id long, xml string")
+    payloads = map_rows(docs, render, "doc_id long, xml string")
     return wiki_pages_table(payloads)
 
 
@@ -679,7 +655,7 @@ def _q_sqldump_ingest(spark, sf):
         })
         return d, dump
 
-    payloads = _map_rows(docs, render, "doc_id long, sql string")
+    payloads = map_rows(docs, render, "doc_id long, sql string")
     return sqldump_rows_table(payloads)
 
 
@@ -1900,7 +1876,7 @@ def _q_wds_ingest(spark, sf):
             samples[key] = fields
         return d, build_wds_tar(samples)
 
-    shards = _map_rows(docs, render, "doc_id long, payload binary")
+    shards = map_rows(docs, render, "doc_id long, payload binary")
     members = wds_members(shards)
     return members.select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -1976,7 +1952,7 @@ def _q_latex_ingest(spark, sf):
         ]
         return d, build_latex(blocks)
 
-    media = _map_rows(docs, render, "doc_id long, payload binary")
+    media = map_rows(docs, render, "doc_id long, payload binary")
     return latex_spans(media)
 
 
@@ -2056,7 +2032,7 @@ def _q_markdown_ingest(spark, sf):
         ]
         return d, build_markdown(blocks)
 
-    media = _map_rows(docs, render, "doc_id long, payload binary")
+    media = map_rows(docs, render, "doc_id long, payload binary")
     return markdown_spans(media)
 
 
@@ -2122,7 +2098,7 @@ def _q_mbox_ingest(spark, sf):
                  "html": "<b>html loses</b>"})
         return d, build_mbox(msgs)
 
-    media = _map_rows(docs, render, "doc_id long, payload binary")
+    media = map_rows(docs, render, "doc_id long, payload binary")
     return mbox_messages(media)
 
 
@@ -2187,7 +2163,7 @@ def _q_odt_ingest(spark, sf):
         ]
         return d, build_odt(blocks)
 
-    media = _map_rows(docs, render, "doc_id long, payload binary")
+    media = map_rows(docs, render, "doc_id long, payload binary")
     return odt_spans(media)
 
 
@@ -2250,7 +2226,7 @@ def _q_ipynb_ingest(spark, sf):
             cells, lang=("python", "julia", "r")[d % 3],
             list_sources=bool(d % 2))
 
-    media = _map_rows(docs, render, "doc_id long, payload binary")
+    media = map_rows(docs, render, "doc_id long, payload binary")
     return ipynb_spans(media)
 
 
@@ -2321,7 +2297,7 @@ def _q_patch_ingest(spark, sf):
             files.append(("img.png", "img.png", "binary"))
         return d, build_patch(files)
 
-    media = _map_rows(docs, render, "doc_id long, payload binary")
+    media = map_rows(docs, render, "doc_id long, payload binary")
     return patch_hunks(media)
 
 
@@ -2414,7 +2390,7 @@ def _q_mp3_meta(spark, sf):
             p = build_mp3(n, vbr_alternate=192)
         return d, p
 
-    media = _map_rows(docs, render, "doc_id long, payload binary")
+    media = map_rows(docs, render, "doc_id long, payload binary")
     return mp3_meta(media)
 
 
@@ -2616,7 +2592,7 @@ def _q_subtitle_ingest(spark, sf):
             cues, note=f"meta {d}")
         return d, p
 
-    media = _map_rows(docs, render, "doc_id long, payload binary")
+    media = map_rows(docs, render, "doc_id long, payload binary")
     return subtitle_cues(media)
 
 
@@ -2756,7 +2732,7 @@ def _q_front_matter(spark, sf):
             p = "\n".join(lines).encode()
         return d, p
 
-    media = _map_rows(docs, render, "doc_id long, payload binary")
+    media = map_rows(docs, render, "doc_id long, payload binary")
     return front_matter(media)
 
 
@@ -2951,7 +2927,7 @@ def _q_rtf_ingest(spark, sf):
         blocks.append(("text", f"Closing {d}."))
         return d, build_rtf(blocks)
 
-    media = _map_rows(docs, render, "doc_id long, payload binary")
+    media = map_rows(docs, render, "doc_id long, payload binary")
     return rtf_spans(media)
 
 
@@ -3006,7 +2982,7 @@ def _q_docx_ingest(spark, sf):
         ]
         return d, build_docx(blocks)
 
-    media = _map_rows(docs, render, "doc_id long, payload binary")
+    media = map_rows(docs, render, "doc_id long, payload binary")
     return docx_spans(media)
 
 
@@ -3049,7 +3025,7 @@ def _q_xlsx_ingest(spark, sf):
         ]
         return d, build_xlsx(grid, inline_strings=(d % 2 == 1))
 
-    media = _map_rows(docs, render, "doc_id long, payload binary")
+    media = map_rows(docs, render, "doc_id long, payload binary")
     return xlsx_cells(media)
 
 
@@ -3090,7 +3066,7 @@ def _q_pptx_ingest(spark, sf):
         ]
         return d, build_pptx(slides)
 
-    media = _map_rows(docs, render, "doc_id long, payload binary")
+    media = map_rows(docs, render, "doc_id long, payload binary")
     return pptx_slides(media)
 
 
@@ -3136,7 +3112,7 @@ def _q_epub_ingest(spark, sf):
         ]
         return d, build_epub(chapters)
 
-    media = _map_rows(docs, render, "doc_id long, payload binary")
+    media = map_rows(docs, render, "doc_id long, payload binary")
     chapters = epub_chapters(media)
     keyed = chapters.select(
         F.concat(F.col("doc_id"), F.lit("#"), F.col("chapter").cast("string"))
@@ -3273,7 +3249,7 @@ def _q_image_neardup(spark, sf):
     def build(i):
         return str(i), doc_image(i)
 
-    media = _map_rows(ids, build, "media_ref string, payload binary")
+    media = map_rows(ids, build, "media_ref string, payload binary")
     sk = image_dhash(media).where("valid").select(
         F.col("media_ref").cast("long").alias("doc_id"),
         F.col("dhash").alias("sk"),
@@ -3359,7 +3335,7 @@ def _q_exif_metadata(spark, sf):
         )
         return d, splice_app1(base, app1)
 
-    media = _map_rows(docs, render, "doc_id long, payload binary")
+    media = map_rows(docs, render, "doc_id long, payload binary")
     return exif_metadata(media).select(
         "doc_id", "orientation", "make", "model", "datetime",
         "datetime_original",
@@ -3402,7 +3378,7 @@ def _q_id3_metadata(spark, sf):
         )
         return d, tag + b"\xff\xfb..."
 
-    media = _map_rows(docs, render, "doc_id long, payload binary")
+    media = map_rows(docs, render, "doc_id long, payload binary")
     return id3_metadata(media).select(
         "doc_id", "title", "artist", "album", "year"
     )
@@ -3465,7 +3441,7 @@ def _q_mp4_metadata(spark, sf):
             moov_largesize=(d % 8 == 3),
         )
 
-    media = _map_rows(docs, render, "doc_id long, payload binary")
+    media = map_rows(docs, render, "doc_id long, payload binary")
     return mp4_meta_table(media)
 
 
@@ -3512,7 +3488,7 @@ def _q_exif_strip(spark, sf):
             j = j[:2] + com + j[2:]
         return str(d), j
 
-    media = _map_rows(docs, build, "media_ref string, payload binary")
+    media = map_rows(docs, build, "media_ref string, payload binary")
     stripped = strip_media_metadata(media)
 
     def check(ref, payload, was):
@@ -3529,7 +3505,7 @@ def _q_exif_strip(spark, sf):
                 ok = False
         return d, bool(ok)
 
-    return _map_rows(stripped, check, "doc_id long, strip_ok boolean")
+    return map_rows(stripped, check, "doc_id long, strip_ok boolean")
 
 
 # mojibake replay: the repaired text must equal the accented clean
@@ -3569,7 +3545,7 @@ def _q_mojibake_repair(spark, sf):
     def corrupt(d, t):
         return d, t.encode("utf-8").decode("latin-1") if d % 2 == 0 else t
 
-    corrupted = _map_rows(staged, corrupt, "doc_id long, text string")
+    corrupted = map_rows(staged, corrupt, "doc_id long, text string")
     return repair_mojibake(corrupted)
 
 
@@ -3942,7 +3918,7 @@ def _q_cdc_chunks(spark, sf):
     def build(i, side):
         return f"{side}{i}", payload(side, i)
 
-    blobs = _map_rows(pairs, build, "blob_id string, payload binary")
+    blobs = map_rows(pairs, build, "blob_id string, payload binary")
     chunks = blob_chunks(blobs, **kw).select(
         F.substring("blob_id", 1, 1).alias("side"),
         F.expr("substring(blob_id, 2)").cast("long").alias("doc_id"),
@@ -4477,7 +4453,7 @@ def _q_pdf_media_roundtrip(spark, sf):
         )
         return str(d), make_text_pdf(pages, compress=True, **img_kw)
 
-    raw = _map_rows(docs, build, "doc_id string, payload binary")
+    raw = map_rows(docs, build, "doc_id string, payload binary")
     media = pdf_media_table(raw)
 
     def check(doc_id, ref, payload, fmt):
@@ -4497,7 +4473,7 @@ def _q_pdf_media_roundtrip(spark, sf):
             ok = False
         return d, bool(ok)
 
-    verdict = _map_rows(media, check, "doc_id long, media_ok boolean")
+    verdict = map_rows(media, check, "doc_id long, media_ok boolean")
     # exactly one media row per doc AND every row ok
     agg = verdict.groupBy("doc_id").agg(
         (F.count("*") == 1).alias("one_row"), F.min("media_ok").alias("all_ok")
@@ -4591,7 +4567,9 @@ def _q_media_resize_roundtrip(spark, sf):
     def build(d):
         return str(d), doc_image(d)
 
-    media = _map_rows(_docs(spark, sf, 60), build, "media_ref string, payload binary")
+    # spread before the render: the 60-row scan is one split, and render,
+    # resize and check would otherwise all run in one task
+    media = map_rows(_spread(_docs(spark, sf, 60)), build, "media_ref string, payload binary")
     resized = MM.resize_image(media)
 
     def check(ref, out, was_resized):
@@ -4627,7 +4605,7 @@ def _q_media_resize_roundtrip(spark, sf):
                 ok = False
         return doc_id, bool(ok)
 
-    return _map_rows(resized, check, "doc_id long, resize_ok boolean").orderBy(
+    return map_rows(resized, check, "doc_id long, resize_ok boolean").orderBy(
         "doc_id"
     )
 
@@ -4682,7 +4660,7 @@ def _q_audio_transcode_roundtrip(spark, sf):
     def build(d):
         return str(d), doc_wav(d)[0]
 
-    media = _map_rows(_docs(spark, sf, 50), build, "media_ref string, payload binary")
+    media = map_rows(_docs(spark, sf, 50), build, "media_ref string, payload binary")
     out = AU.transcode_wav(media, target_rate=16000)
 
     def check(ref, payload, transcoded):
@@ -4703,7 +4681,7 @@ def _q_audio_transcode_roundtrip(spark, sf):
                 ok = False
         return doc_id, bool(ok)
 
-    return _map_rows(
+    return map_rows(
         out.select("media_ref", "payload", "transcoded"),
         check,
         "doc_id long, audio_ok boolean",

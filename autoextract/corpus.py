@@ -6,7 +6,7 @@ Two layers:
   (``lambda/api/app/extraction.py:160-206``: 6 words, golden values + indices),
   a two-column page with spanning header (XY-cut exercise), a multipage doc,
   and a media-interleaved page;
-* a *distributed* generator (``spark.range`` → ``mapInPandas``) producing
+* a *distributed* generator (``spark.range`` → per-row ``mapInArrow``) producing
   arbitrarily many form-family documents. Every generated word carries a
   construction-order rank (``true_order``) derived purely from the generation
   geometry — an oracle independent of the layout algorithm — while the
@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .operators._docwise import flat_map_rows, map_rows
 
 # ----------------------------------------------------------------------
 # Spark schemas
@@ -325,36 +327,26 @@ def _gen_one_doc(
     return rows, expected
 
 
+def _doc_indices(spark: SparkSession, n_docs: int) -> DataFrame:
+    """``range(n_docs)`` spread over at least 8 partitions: the document
+    indices a generator renders its rows from."""
+    return spark.range(n_docs).repartition(max(spark.sparkContext.defaultParallelism, 8))
+
+
 def gen_corpus(
-    spark: SparkSession,
-    n_docs: int,
-    seed: int = 42,
-    mega_doc: bool = False,
-    partitions: int | None = None,
+    spark: SparkSession, n_docs: int, seed: int = 42, mega_doc: bool = False
 ) -> DataFrame:
     """Distributed corpus: ``n_docs`` form documents (+ optional mega-doc at
     index 0 carrying ~100× the median word count — the skew fixture,
     FIXTURES.md §2). Returns the generator table incl. ``true_order``.
     """
-    parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
+    names = GEN_SCHEMA.names
 
-    def kernel(batches):
-        for pdf in batches:
-            out: list[dict] = []
-            for doc_idx in pdf["id"].tolist():
-                out.extend(
-                    _gen_one_doc(int(doc_idx), seed, mega=(mega_doc and doc_idx == 0))[0]
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[f.name for f in GEN_SCHEMA.fields],
-            )
+    def gen_words(doc_idx):
+        rows = _gen_one_doc(doc_idx, seed, mega=(mega_doc and doc_idx == 0))[0]
+        return [tuple(map(r.get, names)) for r in rows]
 
-    return (
-        spark.range(n_docs)
-        .repartition(parts)
-        .mapInPandas(kernel, schema=GEN_SCHEMA)
-    )
+    return flat_map_rows(_doc_indices(spark, n_docs), gen_words, GEN_SCHEMA)
 
 
 EXPECTED_FIELDS_SCHEMA = T.StructType(
@@ -369,31 +361,18 @@ EXPECTED_FIELDS_SCHEMA = T.StructType(
 
 
 def expected_extracted(
-    spark: SparkSession,
-    n_docs: int,
-    seed: int = 42,
-    mega_doc: bool = False,
-    partitions: int | None = None,
+    spark: SparkSession, n_docs: int, seed: int = 42, mega_doc: bool = False
 ) -> DataFrame:
     """Extraction oracle for ``gen_corpus`` (same seed ⇒ same docs):
     (doc_id, field_path, value, word_ids, confidence) per FIXTURES.md §5.
     Derived from the generation plan, independent of the extractor."""
-    parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
+    names = EXPECTED_FIELDS_SCHEMA.names
 
-    def kernel(batches):
-        for pdf in batches:
-            out: list[dict] = []
-            for doc_idx in pdf["id"].tolist():
-                out.extend(
-                    _gen_one_doc(int(doc_idx), seed, mega=(mega_doc and doc_idx == 0))[1]
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "field_path", "value", "word_ids", "confidence"]
-            )
+    def gen_expected(doc_idx):
+        rows = _gen_one_doc(doc_idx, seed, mega=(mega_doc and doc_idx == 0))[1]
+        return [tuple(map(r.get, names)) for r in rows]
 
-    return (
-        spark.range(n_docs).repartition(parts).mapInPandas(kernel, schema=EXPECTED_FIELDS_SCHEMA)
-    )
+    return flat_map_rows(_doc_indices(spark, n_docs), gen_expected, EXPECTED_FIELDS_SCHEMA)
 
 
 def ocr_words_view(gen: DataFrame) -> DataFrame:
@@ -536,27 +515,21 @@ HTML_EXPECTED_SCHEMA = T.StructType(
 
 
 def gen_html_corpus(
-    spark: SparkSession, n_docs: int, seed: int = 42, partitions: int | None = None
+    spark: SparkSession, n_docs: int, seed: int = 42
 ) -> tuple[DataFrame, DataFrame]:
     """Distributed HTML corpus → (html_docs, expected flat spans)."""
-    parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
-    rng_range = spark.range(n_docs).repartition(parts)
+    ids = _doc_indices(spark, n_docs)
 
-    def docs_kernel(batches):
-        for pdf in batches:
-            rows = [_gen_one_html(int(i), seed)[0] for i in pdf["id"].tolist()]
-            yield pd.DataFrame(rows, columns=["doc_id", "html"])
+    def gen_html(i):
+        doc = _gen_one_html(i, seed)[0]
+        return doc["doc_id"], doc["html"]
 
-    def expected_kernel(batches):
-        for pdf in batches:
-            rows: list[dict] = []
-            for i in pdf["id"].tolist():
-                exp = _gen_one_html(int(i), seed)[1]
-                for seq, r in enumerate(exp):
-                    r["seq"] = seq
-                    rows.append(r)
-            yield pd.DataFrame(rows, columns=["doc_id", "kind", "text", "media_ref", "seq"])
+    def gen_html_expected(i):
+        return [
+            (r["doc_id"], r["kind"], r["text"], r["media_ref"], seq)
+            for seq, r in enumerate(_gen_one_html(i, seed)[1])
+        ]
 
-    docs = rng_range.mapInPandas(docs_kernel, schema=HTML_DOCS_SCHEMA)
-    expected = rng_range.mapInPandas(expected_kernel, schema=HTML_EXPECTED_SCHEMA)
+    docs = map_rows(ids, gen_html, HTML_DOCS_SCHEMA)
+    expected = flat_map_rows(ids, gen_html_expected, HTML_EXPECTED_SCHEMA)
     return docs, expected

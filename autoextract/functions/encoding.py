@@ -12,8 +12,8 @@ Double-encoded payloads unwind over ``max_rounds`` iterations.
 Encoding choice: try Windows-1252 first (the codec real pipelines decode
 with — its 0x80–0x9F block holds the punctuation that appears in mojibake
 like "â€™"), fall back to Latin-1 (covers the C1 range cp1252 leaves
-undefined). Pure CPython string codecs inside an Arrow-batched
-``mapInPandas`` stage — per-row byte re-coding is inherent to the task
+undefined). Pure CPython string codecs inside a per-row
+``mapInArrow`` stage — per-row byte re-coding is inherent to the task
 (same stance as the PDF/codec kernels); the stage is narrow, zero
 shuffles, and O6-contained (a pathological row passes through unrepaired,
 never fails the task).
@@ -21,8 +21,9 @@ never fails the task).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..operators._docwise import map_rows
 
 
 def fix_mojibake_str(s: str, max_rounds: int = 2) -> tuple[str, bool]:
@@ -63,19 +64,13 @@ def repair_mojibake(
     )
     schema = f"{out_fields}, repaired boolean"
 
-    def kernel(batches):
-        for pdf in batches:
-            fixed, flags = [], []
-            for s in pdf[text_col]:
-                f, r = fix_mojibake_str(s, max_rounds=max_rounds)
-                fixed.append(f)
-                flags.append(r)
-            pdf = pdf.copy()
-            pdf[text_col] = fixed
-            pdf["repaired"] = pd.Series(flags, index=pdf.index, dtype=bool)
-            yield pdf
+    k = cols.index(text_col)
 
-    return docs.mapInPandas(kernel, schema=schema)
+    def mojibake_row(*row):
+        fixed, repaired = fix_mojibake_str(row[k], max_rounds=max_rounds)
+        return (*row[:k], fixed, *row[k + 1:], bool(repaired))
+
+    return map_rows(docs, mojibake_row, schema)
 
 
 def normalize_unicode(
@@ -86,7 +81,7 @@ def normalize_unicode(
     ``é`` as U+00E9 and as ``e``+U+0301 are the SAME text and must hash the
     same) and append ``normalized`` (whether the string changed).
 
-    Arrow-batched ``mapInPandas`` over ``unicodedata.normalize`` with a
+    Per-row ``mapInArrow`` stage over ``unicodedata.normalize`` with a
     per-string ``isascii`` early-exit (ASCII is normalization-invariant in
     every form, and a real corpus is mostly ASCII).  NFKC is available for
     the aggressive compatibility fold (ligatures, full-width forms) that
@@ -104,23 +99,14 @@ def normalize_unicode(
     )
     schema = f"{out_fields}, normalized boolean"
 
-    def kernel(batches):
-        for pdf in batches:
-            fixed, flags = [], []
-            for s in pdf[text_col]:
-                if s is None or s.isascii():
-                    fixed.append(s)
-                    flags.append(False)
-                    continue
-                n = unicodedata.normalize(form, s)
-                fixed.append(n)
-                flags.append(n != s)
-            pdf = pdf.copy()
-            pdf[text_col] = fixed
-            pdf["normalized"] = pd.Series(flags, index=pdf.index, dtype=bool)
-            yield pdf
+    k = cols.index(text_col)
 
-    return docs.mapInPandas(kernel, schema=schema)
+    def normalize_row(*row):
+        s = row[k]
+        n = s if s is None or s.isascii() else unicodedata.normalize(form, s)
+        return (*row[:k], n, *row[k + 1:], n != s)
+
+    return map_rows(docs, normalize_row, schema)
 
 
 # ----------------------------------------------------------------------
@@ -194,18 +180,8 @@ def detect_and_decode(
         f"{id_col} {id_type}, encoding string, had_bom boolean, "
         "valid boolean, text string"
     )
-    cols = [id_col, "encoding", "had_bom", "valid", "text"]
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(payload) if payload is not None else None
-                enc, bom, valid, text = detect_decode_bytes(b)
-                rows.append({
-                    id_col: did, "encoding": enc, "had_bom": bom,
-                    "valid": valid, "text": text,
-                })
-            yield pd.DataFrame(rows, columns=cols)
+    def decode_row(did, payload):
+        return (did, *detect_decode_bytes(payload))
 
-    return docs.mapInPandas(kernel, schema=schema)
+    return map_rows(docs.select(id_col, payload_col), decode_row, schema)

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..operators._docwise import map_rows
+
 # ----------------------------------------------------------------------
 # tokenization
 # ----------------------------------------------------------------------
@@ -731,11 +733,11 @@ def compression_ratio(docs, id_col: str = "doc_id", text_col: str = "text",
     and the ratio needs no language model at all.
 
     Adds ``comp_ratio`` = compressed_bytes / utf8_bytes (empty text → 1.0).
-    Arrow-batched ``mapInPandas`` over ``zlib`` (a C codec per batch — the
-    per-row Python is one call into zlib, not per-byte work); zero
-    shuffles.  Not SQL-expressible, so the driver gate is a verdict query
-    (planted repetitive vs pseudo-random docs must land on the expected
-    sides of the thresholds) rather than a value replay.
+    Per-row ``mapInArrow`` stage over ``zlib`` (the per-row Python is one
+    call into the C codec, not per-byte work); zero shuffles.  Not
+    SQL-expressible, so its query gate is a verdict query (planted
+    repetitive vs pseudo-random docs must land on the expected sides of
+    the thresholds) rather than a value replay.
     """
     import zlib
 
@@ -745,20 +747,16 @@ def compression_ratio(docs, id_col: str = "doc_id", text_col: str = "text",
     )
     schema = f"{out_fields}, comp_ratio double"
 
-    def kernel(batches):
-        for pdf in batches:
-            ratios = []
-            for s in pdf[text_col]:
-                if not s:
-                    ratios.append(1.0)
-                    continue
-                raw = s.encode("utf-8")
-                ratios.append(len(zlib.compress(raw, level)) / len(raw))
-            out = pdf.copy()
-            out["comp_ratio"] = ratios
-            yield out
+    k = cols.index(text_col)
 
-    return docs.mapInPandas(kernel, schema=schema)
+    def comp_ratio_row(*row):
+        s = row[k]
+        if not s:
+            return (*row, 1.0)
+        raw = s.encode("utf-8")
+        return (*row, len(zlib.compress(raw, level)) / len(raw))
+
+    return map_rows(docs, comp_ratio_row, schema)
 
 
 def scrub_text(docs, id_col: str = "doc_id", text_col: str = "text"):

@@ -1,4 +1,10 @@
-"""The one doc-boundary loop shared by every doc-keyed Python kernel.
+"""The two Arrow-batch loops shared by every Python kernel.
+
+A per-row kernel maps each input row to zero, one or more output rows on its
+own: ``flat_map_rows`` runs such a function in one ``mapInArrow`` stage,
+``map_rows`` is its one-row form and ``parsed_rows`` its form for a parser of
+one payload column into record dicts. Being per-row, none of them can depend
+on where Spark cuts the Arrow batches.
 
 A doc-keyed stage hash-partitions its rows on ``doc_id`` and sorts each
 partition by doc_id first, so every document arrives complete and contiguous
@@ -9,7 +15,76 @@ documents inside one call of that function.
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterable
+
 import numpy as np
+from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
+
+
+def _struct(schema: str | StructType) -> StructType:
+    return schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+
+
+def flat_map_rows(
+    df: DataFrame, fn: Callable[..., Iterable[tuple]], schema: str | StructType
+) -> DataFrame:
+    """Apply ``fn`` row by row in one ``mapInArrow`` stage. ``fn`` gets one
+    row's values as Python objects (``None`` for null, ``bytes`` for binary,
+    lists and dicts for arrays and structs), in column order, and returns the
+    row's output rows, each a tuple in ``schema`` order. The stage is named
+    after ``fn`` in plans."""
+    arrow_schema = to_arrow_schema(_struct(schema))
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            rows = [
+                out
+                for row in zip(*(c.to_pylist() for c in batch.columns))
+                for out in fn(*row)
+            ]
+            cols = zip(*rows) if rows else [()] * len(arrow_schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, arrow_schema)],
+                schema=arrow_schema,
+            )
+
+    kernel.__name__ = fn.__name__  # names the MapInArrow node in plans
+    return df.mapInArrow(kernel, schema)
+
+
+def map_rows(
+    df: DataFrame, fn: Callable[..., tuple], schema: str | StructType
+) -> DataFrame:
+    """``flat_map_rows`` for a ``fn`` that returns exactly one output row."""
+
+    def one(*row):
+        return (fn(*row),)
+
+    one.__name__ = fn.__name__
+    return flat_map_rows(df, one, schema)
+
+
+def parsed_rows(
+    docs: DataFrame,
+    parse: Callable[[bytes], Iterable[dict]],
+    schema: str,
+    payload_col: str = "payload",
+) -> DataFrame:
+    """``docs(doc_id, <payload_col>)`` → one row per record that
+    ``parse(payload)`` returns: the doc_id as a string, then the record's
+    values under ``schema``'s other column names (a missing key is null).
+    A null payload parses as empty bytes."""
+    names = _struct(schema).names[1:]
+
+    def fn(doc_id, payload):
+        return ((str(doc_id), *map(r.get, names)) for r in parse(payload or b""))
+
+    fn.__name__ = parse.__name__
+    return flat_map_rows(docs.select("doc_id", payload_col), fn, schema)
 
 
 def doc_bounds(tbl) -> np.ndarray:

@@ -18,8 +18,9 @@ from __future__ import annotations
 import struct
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ._docwise import map_rows
 
 AUDIO_META_SCHEMA = (
     "media_ref string, fmt string, sample_rate int, n_channels int, "
@@ -163,33 +164,19 @@ def transcode_wav(
         "out_rate int, out_channels int"
     )
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf[payload_col]):
-                b = bytes(payload) if payload is not None else b""
-                try:
-                    x, rate = decode_audio(b)
-                    if mono and x.shape[1] > 1:
-                        x = x.mean(axis=1, keepdims=True)
-                    y = resample_audio(x, rate, target_rate)
-                    out_b = make_wav(y, sample_rate=target_rate, bits=16)
-                    rows.append(
-                        {"media_ref": ref, "payload": out_b, "transcoded": True,
-                         "out_rate": target_rate, "out_channels": y.shape[1]}
-                    )
-                except Exception:  # O6 containment: any malformed payload -> row, never task failure
-                    rows.append(
-                        {"media_ref": ref, "payload": b, "transcoded": False,
-                         "out_rate": None, "out_channels": None}
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_ref", "payload", "transcoded",
-                         "out_rate", "out_channels"],
-            )
+    def transcode_row(ref, payload):
+        b = payload or b""
+        try:
+            x, rate = decode_audio(b)
+            if mono and x.shape[1] > 1:
+                x = x.mean(axis=1, keepdims=True)
+            y = resample_audio(x, rate, target_rate)
+            out_b = make_wav(y, sample_rate=target_rate, bits=16)
+            return ref, out_b, True, target_rate, y.shape[1]
+        except Exception:  # O6 containment: any malformed payload -> row, never task failure
+            return ref, b, False, None, None
 
-    return media.mapInPandas(kernel, schema=schema)
+    return map_rows(media.select("media_ref", payload_col), transcode_row, schema)
 
 
 def decode_audio_meta(media: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -197,60 +184,31 @@ def decode_audio_meta(media: DataFrame, payload_col: str = "payload") -> DataFra
     WAV and — r5 — FLAC STREAMINFO; other/garbage payloads → valid=false
     row, never a task failure)."""
 
-    def kernel(batches):
+    def audio_meta_row(ref, payload):
         from .flac_codec import parse_flac_streaminfo
 
-        for pdf in batches:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf[payload_col]):
-                b = bytes(payload) if payload is not None else b""
-                try:
-                    if b[:4] == b"fLaC":
-                        s = parse_flac_streaminfo(b)
-                        h = {
-                            "sample_rate": s["sample_rate"],
-                            "n_channels": s["n_channels"],
-                            "bits_per_sample": s["bits_per_sample"],
-                            "n_frames": s["total_samples"],
-                        }
-                        fmt = "flac"
-                    else:
-                        h = parse_wav_header(b)
-                        fmt = "wav"
-                    rows.append(
-                        {
-                            "media_ref": ref,
-                            "fmt": fmt,
-                            "sample_rate": h["sample_rate"],
-                            "n_channels": h["n_channels"],
-                            "bits_per_sample": h["bits_per_sample"],
-                            "n_frames": h["n_frames"],
-                            "duration_s": h["n_frames"] / max(h["sample_rate"], 1),
-                            "valid": True,
-                        }
-                    )
-                except Exception:  # O6 containment: any malformed payload -> row, never task failure
-                    rows.append(
-                        {
-                            "media_ref": ref,
-                            "fmt": "unknown",
-                            "sample_rate": None,
-                            "n_channels": None,
-                            "bits_per_sample": None,
-                            "n_frames": None,
-                            "duration_s": None,
-                            "valid": False,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_ref", "fmt", "sample_rate", "n_channels",
-                    "bits_per_sample", "n_frames", "duration_s", "valid",
-                ],
+        b = payload or b""
+        try:
+            if b[:4] == b"fLaC":
+                s = parse_flac_streaminfo(b)
+                h = {
+                    "sample_rate": s["sample_rate"],
+                    "n_channels": s["n_channels"],
+                    "bits_per_sample": s["bits_per_sample"],
+                    "n_frames": s["total_samples"],
+                }
+                fmt = "flac"
+            else:
+                h = parse_wav_header(b)
+                fmt = "wav"
+            return (
+                ref, fmt, h["sample_rate"], h["n_channels"], h["bits_per_sample"],
+                h["n_frames"], h["n_frames"] / max(h["sample_rate"], 1), True,
             )
+        except Exception:  # O6 containment: any malformed payload -> row, never task failure
+            return ref, "unknown", None, None, None, None, None, False
 
-    return media.mapInPandas(kernel, schema=AUDIO_META_SCHEMA)
+    return map_rows(media.select("media_ref", payload_col), audio_meta_row, AUDIO_META_SCHEMA)
 
 
 def embed_audio(
@@ -265,38 +223,24 @@ def embed_audio(
     would silently poison similarity ops, so pipelines filter on it."""
     schema = "media_ref string, embedding array<float>, real_feature boolean"
 
-    def kernel(batches):
-        for pdf in batches:
-            refs = pdf["media_ref"].tolist()
-            feats = []
-            real_flags = []
-            for payload in pdf[payload_col]:
-                b = bytes(payload) if payload is not None else b""
-                vec = None
-                try:
-                    x, _ = decode_audio(b)
-                    mono = x.mean(axis=1)
-                    if len(mono) >= dim:
-                        cut = (len(mono) // dim) * dim
-                        win = mono[:cut].reshape(dim, -1)
-                        rms = np.sqrt((win * win).mean(axis=1))
-                        norm = float(np.linalg.norm(rms))
-                        vec = (rms / norm if norm > 0 else rms).astype("float32")
-                except Exception:  # O6 containment: any malformed payload -> row, never task failure
-                    vec = None
-                real_flags.append(vec is not None)
-                if vec is None:
-                    seed = int.from_bytes(
-                        __import__("hashlib").md5(b).digest()[:4], "little"
-                    )
-                    vec = np.random.RandomState(seed).rand(dim).astype("float32")
-                feats.append(vec)
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "embedding": [f.tolist() for f in feats],
-                    "real_feature": real_flags,
-                }
-            )
+    def embed_audio_row(ref, payload):
+        b = payload or b""
+        vec = None
+        try:
+            x, _ = decode_audio(b)
+            mono = x.mean(axis=1)
+            if len(mono) >= dim:
+                cut = (len(mono) // dim) * dim
+                win = mono[:cut].reshape(dim, -1)
+                rms = np.sqrt((win * win).mean(axis=1))
+                norm = float(np.linalg.norm(rms))
+                vec = (rms / norm if norm > 0 else rms).astype("float32")
+        except Exception:  # O6 containment: any malformed payload -> row, never task failure
+            vec = None
+        real = vec is not None
+        if vec is None:
+            seed = int.from_bytes(__import__("hashlib").md5(b).digest()[:4], "little")
+            vec = np.random.RandomState(seed).rand(dim).astype("float32")
+        return ref, vec.tolist(), real
 
-    return media.mapInPandas(kernel, schema=schema)
+    return map_rows(media.select("media_ref", payload_col), embed_audio_row, schema)

@@ -18,8 +18,8 @@ enforces min/max chunk sizes is a Python loop (≈ one iteration per
 emitted chunk). The gear table derives from md5 of the byte value, so
 chunking is deterministic across processes, engines, and table versions.
 
-Scale shape: blobs chunk independently inside an Arrow-batched
-``mapInPandas`` — narrow stage, zero shuffles; downstream chunk-level
+Scale shape: blobs chunk independently inside a per-row
+``mapInArrow`` stage — narrow stage, zero shuffles; downstream chunk-level
 dedup is a plain groupBy on the chunk sha256 (short key; chunk BYTES
 never shuffle unless the caller explicitly materializes unique chunks).
 """
@@ -29,8 +29,9 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ._docwise import flat_map_rows
 
 #: deterministic 256-entry gear table: first 8 md5 bytes of "gear-<i>"
 _GEAR = np.array(
@@ -98,30 +99,14 @@ def blob_chunks(
     NULL/empty payloads yield zero rows (containment); offsets+lengths
     partition each blob exactly, so the caller can always rehydrate."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for bid, payload in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(payload) if payload is not None else b""
-                for i, (off, ln) in enumerate(
-                    gear_chunks(b, avg_bits, min_size, max_size)
-                ):
-                    rows.append(
-                        {
-                            "blob_id": bid,
-                            "ord": i,
-                            "offset": off,
-                            "length": ln,
-                            "chunk_sha": hashlib.sha256(
-                                b[off : off + ln]
-                            ).hexdigest(),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["blob_id", "ord", "offset", "length", "chunk_sha"]
-            )
+    def chunk_rows(bid, payload):
+        b = payload or b""
+        return [
+            (bid, i, off, ln, hashlib.sha256(b[off : off + ln]).hexdigest())
+            for i, (off, ln) in enumerate(gear_chunks(b, avg_bits, min_size, max_size))
+        ]
 
-    return blobs.mapInPandas(
-        kernel,
-        schema="blob_id string, ord int, offset long, length long, chunk_sha string",
+    return flat_map_rows(
+        blobs.select(id_col, payload_col), chunk_rows,
+        "blob_id string, ord int, offset long, length long, chunk_sha string",
     )

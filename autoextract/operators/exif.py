@@ -13,7 +13,7 @@ IFD0 entry walk, SHORT/LONG/ASCII value decoding with the ≤4-byte inline
 vs offset rule, and the ExifIFD pointer (0x8769) for DateTimeOriginal.
 Malformed payloads yield NULLs (O6 containment), never task failures.
 
-Spark shape: one ``mapInPandas`` Arrow kernel over the binary column —
+Spark shape: one per-row ``mapInArrow`` kernel over the binary column —
 narrow, zero shuffles; bytes never become JVM strings.
 """
 
@@ -21,8 +21,9 @@ from __future__ import annotations
 
 import struct
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ._docwise import map_rows
 
 #: (tag, name) pairs read from IFD0 / ExifIFD
 TAG_MAKE = 0x010F
@@ -225,17 +226,16 @@ def exif_metadata(
     )
     schema = f"{out_fields}, {EXIF_SCHEMA}"
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = [parse_exif(bytes(p) if p is not None else b"")
-                    for p in pdf[payload_col]]
-            out = pdf.copy()
-            for k in ("orientation", "make", "model", "datetime",
-                      "datetime_original"):
-                out[k] = [r[k] for r in rows]
-            yield out
+    k = cols.index(payload_col)
 
-    return media.mapInPandas(kernel, schema=schema)
+    def exif_row(*row):
+        r = parse_exif(row[k] or b"")
+        return (
+            *row, r["orientation"], r["make"], r["model"], r["datetime"],
+            r["datetime_original"],
+        )
+
+    return map_rows(media, exif_row, schema)
 
 
 # ----------------------------------------------------------------------
@@ -292,21 +292,15 @@ def strip_media_metadata(
     segments removed; non-JPEG payloads pass through byte-identical with
     ``stripped=false`` (the resize kernel's containment contract).
     Narrow Arrow stage, zero shuffles."""
-    import pandas as pd  # local: the module is otherwise pandas-free
-
     schema_id_type = "string" if id_col == "media_ref" else "long"
     schema = f"{id_col} {schema_id_type}, payload binary, stripped boolean"
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for ref, payload in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(payload) if payload is not None else b""
-                try:
-                    out, changed = strip_jpeg_metadata(b)
-                except Exception:
-                    out, changed = b, False
-                rows.append({id_col: ref, "payload": out, "stripped": changed})
-            yield pd.DataFrame(rows, columns=[id_col, "payload", "stripped"])
+    def strip_row(ref, payload):
+        b = payload or b""
+        try:
+            out, changed = strip_jpeg_metadata(b)
+        except Exception:
+            out, changed = b, False
+        return ref, out, changed
 
-    return media.mapInPandas(kernel, schema=schema)
+    return map_rows(media.select(id_col, payload_col), strip_row, schema)

@@ -5,8 +5,8 @@ north rule's axis A: strip boilerplate from HTML documents and emit the main
 content as interleaved text + media spans. The heuristic is the published
 Content-Extraction-via-Text-Density / Arc90-readability family:
 
-  1. parse the markup (stdlib ``html.parser`` — pure Python, vectorized per
-     Arrow batch inside ``mapInPandas``; no external deps)
+  1. parse the markup (stdlib ``html.parser`` — pure Python, one call per
+     document inside a per-row ``mapInArrow`` stage; no external deps)
   2. drop tag-level boilerplate outright: ``script/style/noscript/template/
      nav/header/footer/aside`` and HTML comments
   3. score each container by text length × (1 − link density); link-heavy
@@ -27,8 +27,10 @@ from __future__ import annotations
 
 from html.parser import HTMLParser
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ._docwise import flat_map_rows
+from .layout import SPANS_TABLE_SCHEMA
 
 BOILERPLATE_TAGS = {"script", "style", "noscript", "template", "nav", "header", "footer", "aside"}
 MEDIA_TAGS = {"img", "figure", "table", "video", "audio", "iframe", "embed"}
@@ -221,53 +223,31 @@ HTML_SPANS_SCHEMA = "doc_id string, seq int, kind string, text string, media_ref
 
 def strip_html(html_docs: DataFrame) -> DataFrame:
     """``html_docs(doc_id, html)`` → flattened spans (doc_id, seq, kind,
-    text, media_ref) via ``mapInPandas`` — one Arrow batch of documents per
-    call, no per-row Python at the Spark level; documents are independent so
-    this is a narrow (shuffle-free) stage.
+    text, media_ref): one per-row Arrow stage; documents are independent,
+    so this is a narrow (shuffle-free) stage.
     """
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, html in zip(pdf["doc_id"], pdf["html"]):
-                for seq, (kind, text, ref) in enumerate(html_to_spans(doc_id, html)):
-                    rows.append(
-                        {"doc_id": doc_id, "seq": seq, "kind": kind, "text": text, "media_ref": ref}
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "seq", "kind", "text", "media_ref"]
-            )
+    def html_span_rows(doc_id, html):
+        return [
+            (doc_id, seq, kind, text, ref)
+            for seq, (kind, text, ref) in enumerate(html_to_spans(doc_id, html))
+        ]
 
-    return html_docs.mapInPandas(kernel, schema=HTML_SPANS_SCHEMA)
+    return flat_map_rows(html_docs.select("doc_id", "html"), html_span_rows, HTML_SPANS_SCHEMA)
 
 
 def html_spans_table(html_docs: DataFrame) -> DataFrame:
-    """End-to-end: html_docs → canonical ``documents(doc_id, spans)``."""
-    from pyspark.sql import functions as F
+    """End-to-end: html_docs → canonical ``documents(doc_id, spans)``, one
+    nested row per document straight from ``html_to_spans``: a narrow stage
+    with no grouping. A document with no spans yields no row."""
 
-    flat = strip_html(html_docs)
-    s = F.struct(
-        F.col("seq").alias("offset"),
-        F.col("kind").alias("kind"),
-        F.col("text").alias("text"),
-        F.col("media_ref").alias("media_ref"),
-    )
-    return (
-        flat.groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list(s)).alias("_s"))
-        .select(
-            "doc_id",
-            F.transform(
-                "_s",
-                lambda x: F.struct(
-                    x["kind"].alias("kind"),
-                    x["text"].alias("text"),
-                    x["media_ref"].alias("media_ref"),
-                    x["offset"].cast("int").alias("offset"),
-                ),
-            ).alias("spans"),
-        )
-    )
+    def html_doc_spans(doc_id, html):
+        spans = html_to_spans(doc_id, html)
+        if not spans:
+            return []
+        return [(doc_id, [(k, t, ref, i) for i, (k, t, ref) in enumerate(spans)])]
+
+    return flat_map_rows(html_docs.select("doc_id", "html"), html_doc_spans, SPANS_TABLE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -367,35 +347,22 @@ def extract_links(html_docs: DataFrame) -> DataFrame:
     :func:`autoextract.operators.graph.pagerank` is
     ``select(doc_id, url).where(url is not null)``."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, html, base in zip(
-                pdf["doc_id"], pdf["html"], pdf["base_url"]
-            ):
-                try:
-                    c = _LinkCollector()
-                    c.feed(html if html is not None else "")
-                    c.close()
-                    for seq, (href, parts) in enumerate(
-                        (h, p) for h, p in c.links if h
-                    ):
-                        rows.append(
-                            {
-                                "doc_id": doc_id,
-                                "seq": seq,
-                                "href": href,
-                                "anchor": " ".join(" ".join(parts).split()),
-                                "url": resolve_href(base, href),
-                            }
-                        )
-                except Exception:  # O6 containment
-                    pass
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "seq", "href", "anchor", "url"]
-            )
+    def link_rows(doc_id, html, base):
+        rows = []
+        try:  # O6 containment: a failure keeps the links resolved so far
+            c = _LinkCollector()
+            c.feed(html if html is not None else "")
+            c.close()
+            for seq, (href, parts) in enumerate((h, p) for h, p in c.links if h):
+                anchor = " ".join(" ".join(parts).split())
+                rows.append((doc_id, seq, href, anchor, resolve_href(base, href)))
+        except Exception:
+            pass
+        return rows
 
-    return html_docs.mapInPandas(kernel, schema=HTML_LINKS_SCHEMA)
+    return flat_map_rows(
+        html_docs.select("doc_id", "html", "base_url"), link_rows, HTML_LINKS_SCHEMA
+    )
 
 
 # ----------------------------------------------------------------------
@@ -562,17 +529,10 @@ def extract_html_tables(html_docs: DataFrame, html_col: str = "html"
     table_id, row, col, header, text)``.  Narrow stage, zero
     shuffles."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, h in zip(pdf["doc_id"], pdf[html_col]):
-                for r in parse_html_tables(h if isinstance(h, str)
-                                           else ""):
-                    rows.append({"doc_id": str(doc_id), **r})
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "table_id", "row", "col", "header",
-                         "text"],
-            )
+    def table_rows(doc_id, h):
+        return [
+            (str(doc_id), r["table_id"], r["row"], r["col"], r["header"], r["text"])
+            for r in parse_html_tables(h if isinstance(h, str) else "")
+        ]
 
-    return html_docs.mapInPandas(kernel, schema=HTML_TABLES_SCHEMA)
+    return flat_map_rows(html_docs.select("doc_id", html_col), table_rows, HTML_TABLES_SCHEMA)

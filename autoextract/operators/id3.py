@@ -11,7 +11,7 @@ frame walk (v2.3 plain-int frame sizes, v2.4 syncsafe), text frames with
 the encoding byte (latin-1 / UTF-16+BOM / UTF-16BE / UTF-8), NUL
 trimming.  Malformed payloads yield NULLs (O6 containment).
 
-Spark shape: one ``mapInPandas`` Arrow kernel over the binary column —
+Spark shape: one per-row ``mapInArrow`` kernel over the binary column —
 narrow, zero shuffles.
 """
 
@@ -19,8 +19,9 @@ from __future__ import annotations
 
 import struct
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ._docwise import map_rows
 
 FRAMES = {"TIT2": "title", "TPE1": "artist", "TALB": "album", "TYER": "year",
           "TDRC": "year"}
@@ -132,13 +133,10 @@ def id3_metadata(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     )
     schema = f"{out_fields}, {ID3_SCHEMA}"
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = [parse_id3(bytes(p) if p is not None else b"")
-                    for p in pdf[payload_col]]
-            out = pdf.copy()
-            for k in ("title", "artist", "album", "year"):
-                out[k] = [r[k] for r in rows]
-            yield out
+    k = cols.index(payload_col)
 
-    return media.mapInPandas(kernel, schema=schema)
+    def id3_row(*row):
+        r = parse_id3(row[k] or b"")
+        return (*row, r["title"], r["artist"], r["album"], r["year"])
+
+    return map_rows(media, id3_row, schema)

@@ -25,14 +25,15 @@ Containment (O6): payloads with no valid sync yield a NULL row with
 ``valid=false``; a mid-stream corruption yields the prefix walked so
 far (valid=true — truncation is normal for range-fetched objects).
 
-Spark shape: one ``mapInPandas`` Arrow kernel over the binary column —
+Spark shape: one per-row ``mapInArrow`` kernel over the binary column —
 narrow, zero shuffles.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ._docwise import parsed_rows
 
 META_SCHEMA = (
     "doc_id string, version string, layer int, sample_rate int,"
@@ -203,17 +204,7 @@ def mp3_meta(docs: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Arrow-batched MP3 header walk → one metadata row per payload.
     Narrow stage, zero shuffles."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                m = parse_mp3_meta(bytes(p) if p is not None else b"")
-                rows.append({"doc_id": str(doc_id), **m})
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "version", "layer", "sample_rate",
-                         "channels", "bitrate_kbps", "n_frames",
-                         "duration_ms", "vbr", "valid"],
-            )
+    def mp3_meta_record(payload):
+        return [parse_mp3_meta(payload)]
 
-    return docs.mapInPandas(kernel, schema=META_SCHEMA)
+    return parsed_rows(docs, mp3_meta_record, META_SCHEMA, payload_col)

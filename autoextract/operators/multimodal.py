@@ -26,9 +26,10 @@ from __future__ import annotations
 import struct
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ._docwise import flat_map_rows, map_rows
 
 #: the reference's resize policy constants (helpers.py:58-104)
 MAX_LONG_EDGE = 1568
@@ -190,40 +191,27 @@ def _bmp_dims(b: bytes) -> tuple[int, int] | None:
     return (w, abs(h)) if w > 0 and h != 0 else None
 
 
+#: header-level (width, height) reader per sniffed format
+_DIMS = {
+    "png": _png_dims, "gif": _gif_dims, "jpeg": _jpeg_dims,
+    "webp": _webp_dims, "tiff": _tiff_dims, "bmp": _bmp_dims,
+}
+
+
 def decode_image_meta(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     """``(media_ref, payload binary)`` → typed metadata. REAL decoder for
     header-level facts (format + dimensions); no external libs."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf[payload_col]):
-                b = bytes(payload) if payload is not None else b""
-                fmt = sniff_format(b)
-                dims = {
-                    "png": _png_dims,
-                    "gif": _gif_dims,
-                    "jpeg": _jpeg_dims,
-                    "webp": _webp_dims,
-                    "tiff": _tiff_dims,
-                    "bmp": _bmp_dims,
-                }.get(fmt, lambda _: None)(b)
-                rows.append(
-                    {
-                        "media_ref": ref,
-                        "fmt": fmt,
-                        "width": dims[0] if dims else None,
-                        "height": dims[1] if dims else None,
-                        "n_bytes": len(b),
-                        "valid": dims is not None,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_ref", "fmt", "width", "height", "n_bytes", "valid"],
-            )
+    def image_meta_row(ref, payload):
+        b = payload or b""
+        fmt = sniff_format(b)
+        dims = _DIMS.get(fmt, lambda _: None)(b)
+        return (
+            ref, fmt, dims[0] if dims else None, dims[1] if dims else None, len(b),
+            dims is not None,
+        )
 
-    return media.mapInPandas(kernel, schema=MEDIA_META_SCHEMA)
+    return map_rows(media.select("media_ref", payload_col), image_meta_row, MEDIA_META_SCHEMA)
 
 
 def resize_plan(meta: DataFrame) -> DataFrame:
@@ -264,7 +252,7 @@ def resize_image(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     """
     schema = "media_ref string, payload binary, resized boolean"
 
-    def kernel(batches):
+    def resize_row(ref, payload):
         from .bmp_codec import resize_bmp_bytes
         from .gif_codec import resize_gif_bytes
         from .jpeg_codec import resize_jpeg_bytes
@@ -281,30 +269,21 @@ def resize_image(media: DataFrame, payload_col: str = "payload") -> DataFrame:
             "tiff": resize_tiff_bytes,  # baseline none/PackBits (r5)
             "bmp": resize_bmp_bytes,  # 24-bit + 8-bit-palette BI_RGB (r5)
         }
-        for pdf in batches:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf[payload_col]):
-                b = bytes(payload) if payload is not None else b""
-                fmt = sniff_format(b)
-                dims = {
-                    "png": _png_dims, "gif": _gif_dims, "jpeg": _jpeg_dims,
-                    "webp": _webp_dims, "tiff": _tiff_dims, "bmp": _bmp_dims,
-                }.get(fmt, lambda _: None)(b)
-                needs = bool(dims and max(dims) > MAX_LONG_EDGE)
-                out_b, resized = b, False
-                if needs and fmt in codecs:
-                    scale = MAX_LONG_EDGE / max(dims)
-                    tw, th = (max(int(round(d * scale)), 1) for d in dims)
-                    try:
-                        out_b, resized = codecs[fmt](b, tw, th), True
-                    except Exception:  # corrupt/unsupported → pass-through
-                        out_b, resized = b, False
-                # PRODUCTION: lossy-VP8 WEBP → Pillow here; those over-size
-                # payloads pass through byte-identical
-                rows.append({"media_ref": ref, "payload": out_b, "resized": resized})
-            yield pd.DataFrame(rows, columns=["media_ref", "payload", "resized"])
+        b = payload or b""
+        fmt = sniff_format(b)
+        dims = _DIMS.get(fmt, lambda _: None)(b)
+        if dims and max(dims) > MAX_LONG_EDGE and fmt in codecs:
+            scale = MAX_LONG_EDGE / max(dims)
+            tw, th = (max(int(round(d * scale)), 1) for d in dims)
+            try:
+                return ref, codecs[fmt](b, tw, th), True
+            except Exception:  # corrupt/unsupported → pass-through
+                pass
+        # PRODUCTION: lossy-VP8 WEBP → Pillow here; those over-size
+        # payloads pass through byte-identical
+        return ref, b, False
 
-    return media.mapInPandas(kernel, schema=schema)
+    return map_rows(media.select("media_ref", payload_col), resize_row, schema)
 
 
 #: backwards-compat name from round 1 (the kernel is no longer a stub for PNG)
@@ -370,35 +349,24 @@ def frame_sample(
     """
     schema = "media_ref string, frame_idx int, frame_payload binary"
 
-    def kernel(batches):
+    def frame_rows(ref, payload):
         from .webp_codec import webp_frames
 
-        for pdf in batches:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf[payload_col]):
-                b = bytes(payload) if payload is not None else b""
-                # PRODUCTION: other containers → ffmpeg demux here
-                fmt = sniff_format(b)
-                if fmt == "gif":
-                    frames = gif_frames(b)
-                elif fmt == "webp":
-                    try:  # animated VP8X/ANMF walk (r5); stills = 1 frame
-                        frames = webp_frames(b)
-                    except Exception:
-                        frames = []
-                else:
-                    frames = []
-                for idx in range(0, len(frames), every_n):
-                    rows.append(
-                        {
-                            "media_ref": ref,
-                            "frame_idx": idx,
-                            "frame_payload": frames[idx],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=["media_ref", "frame_idx", "frame_payload"])
+        b = payload or b""
+        # PRODUCTION: other containers → ffmpeg demux here
+        fmt = sniff_format(b)
+        if fmt == "gif":
+            frames = gif_frames(b)
+        elif fmt == "webp":
+            try:  # animated VP8X/ANMF walk (r5); stills = 1 frame
+                frames = webp_frames(b)
+            except Exception:
+                frames = []
+        else:
+            frames = []
+        return [(ref, idx, frames[idx]) for idx in range(0, len(frames), every_n)]
 
-    return videos.mapInPandas(kernel, schema=schema)
+    return flat_map_rows(videos.select("media_ref", payload_col), frame_rows, schema)
 
 
 #: backwards-compat name from round 1 (GIF demux is no longer a stub)
@@ -425,7 +393,7 @@ def embed_media(media: DataFrame, dim: int = 16, payload_col: str = "payload") -
     side = int(np.sqrt(dim))
     pool_ok = side * side == dim  # pooled grid needs a square dim
 
-    def kernel(batches):
+    def embed_media_row(ref, payload):
         from .gif_codec import decode_gif
         from .jpeg_codec import decode_jpeg
         from .png_codec import decode_png, resize_nearest
@@ -433,45 +401,31 @@ def embed_media(media: DataFrame, dim: int = 16, payload_col: str = "payload") -
 
         decoders = {"png": decode_png, "jpeg": decode_jpeg, "gif": decode_gif,
                     "webp": decode_webp}
-        for pdf in batches:
-            refs = pdf["media_ref"].tolist()
-            feats = []
-            real_flags = []
-            for payload in pdf[payload_col]:
-                b = bytes(payload) if payload is not None else b""
+        b = payload or b""
+        vec = None
+        fmt = sniff_format(b)
+        if pool_ok and fmt in decoders:
+            try:
+                arr = decoders[fmt](b)
+                # color channels only: gray / gray+alpha use channel
+                # 0 (averaging alpha in would skew the intensity);
+                # RGB / RGBA use the three color channels
+                n_color = 1 if arr.shape[2] <= 2 else 3
+                gray = arr[:, :, :n_color].mean(axis=2)
+                pooled = resize_nearest(gray, side, side).astype("float32")
+                flat = pooled.reshape(-1)
+                norm = float(np.linalg.norm(flat))
+                vec = (flat / norm if norm > 0 else flat).astype("float32")
+            except Exception:
                 vec = None
-                fmt = sniff_format(b)
-                if pool_ok and fmt in decoders:
-                    try:
-                        arr = decoders[fmt](b)
-                        # color channels only: gray / gray+alpha use channel
-                        # 0 (averaging alpha in would skew the intensity);
-                        # RGB / RGBA use the three color channels
-                        n_color = 1 if arr.shape[2] <= 2 else 3
-                        gray = arr[:, :, :n_color].mean(axis=2)
-                        pooled = resize_nearest(gray, side, side).astype("float32")
-                        flat = pooled.reshape(-1)
-                        norm = float(np.linalg.norm(flat))
-                        vec = (flat / norm if norm > 0 else flat).astype("float32")
-                    except Exception:
-                        vec = None
-                real_flags.append(vec is not None)
-                if vec is None:
-                    # deterministic per-content seed; PRODUCTION: model.encode
-                    seed = int.from_bytes(
-                        __import__("hashlib").md5(b).digest()[:4], "little"
-                    )
-                    vec = np.random.RandomState(seed).rand(dim).astype("float32")
-                feats.append(vec)
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "embedding": [f.tolist() for f in feats],
-                    "real_feature": real_flags,
-                }
-            )
+        real = vec is not None
+        if vec is None:
+            # deterministic per-content seed; PRODUCTION: model.encode
+            seed = int.from_bytes(__import__("hashlib").md5(b).digest()[:4], "little")
+            vec = np.random.RandomState(seed).rand(dim).astype("float32")
+        return ref, vec.tolist(), real
 
-    return media.mapInPandas(kernel, schema=schema)
+    return map_rows(media.select("media_ref", payload_col), embed_media_row, schema)
 
 
 #: backwards-compat name from round 1 (PNG featurization is no longer a stub)
@@ -555,15 +509,11 @@ def image_dhash(media: DataFrame, payload_col: str = "payload") -> DataFrame:
     blocking is the SAME pigeonhole operator the text SimHash path uses
     (``dedup.hamming_near_dup_pairs``) — one engine for both modalities."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf[payload_col]):
-                b = bytes(payload) if payload is not None else b""
-                hv = dhash64_bytes(b)
-                rows.append(
-                    {"media_ref": ref, "dhash": hv, "valid": hv is not None}
-                )
-            yield pd.DataFrame(rows, columns=["media_ref", "dhash", "valid"])
+    def dhash_row(ref, payload):
+        hv = dhash64_bytes(payload or b"")
+        return ref, hv, hv is not None
 
-    return media.mapInPandas(kernel, schema="media_ref string, dhash long, valid boolean")
+    return map_rows(
+        media.select("media_ref", payload_col), dhash_row,
+        "media_ref string, dhash long, valid boolean",
+    )

@@ -8,7 +8,7 @@ declarative DAG per stage family:
 
     ocr_words ──order_words──► ordered words ──assemble_spans──► spans
          └──────────────────────extract_fields──► extracted (optional)
-    html_docs ──strip_html──► spans                      (axis A source)
+    html_docs ──html_spans_table──► spans                (axis A source)
 
 wrapped in bucket-granular checkpointing (``plans.checkpoint``): a run
 processes only pending buckets, writes ``partitionBy("bucket")`` with dynamic
@@ -16,11 +16,13 @@ overwrite, then commits the checkpoint — kill + rerun converges to the clean
 result (north_rule resumability).
 
 Scale notes:
-  * each written stage has two wide operations, both keyed on doc_id: the
-    kernel's count-free ``repartition(doc_id)`` (``spans_table``,
-    ``strip_html``'s grouping, ``extract_fields``) and the write's count-free
-    ``repartition(bucket)``. Neither names a partition count; AQE coalesces
-    each by shuffle bytes, so a small run is a few tasks, not 32;
+  * the span and extract stages have two wide operations, both keyed on
+    doc_id: the kernel's count-free ``repartition(doc_id)`` (``spans_table``,
+    ``extract_fields``) and the write's count-free ``repartition(bucket)``.
+    The HTML stage has only the write's: ``html_spans_table`` emits each
+    document's nested row from one per-row kernel, with no grouping.
+    Neither names a partition count; AQE coalesces each by shuffle bytes,
+    so a small run is a few tasks, not 32;
   * the write keeps one data file per ``bucket=`` directory: hash
     partitioning puts a bucket in exactly one shuffle partition and AQE only
     merges whole partitions, so one task writes each bucket;

@@ -16,7 +16,7 @@ as the sitemap/feed parsers: WordprocessingML from real writers is
 canonical-form XML; a DOM library adds nothing but a dependency).
 Malformed payloads yield zero spans (O6 containment).
 
-Spark shape: one ``mapInPandas`` Arrow kernel over the binary column —
+Spark shape: one per-row ``mapInArrow`` kernel over the binary column —
 narrow, zero shuffles; the ZIP inflate is stdlib C speed.
 """
 
@@ -26,8 +26,10 @@ import io
 import re
 import zipfile
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..operators._docwise import parsed_rows
+from ._zip import zip_package
 
 SPANS_SCHEMA = (
     "doc_id string, seq int, kind string, text string, level int"
@@ -164,9 +166,8 @@ def build_docx(blocks: list[tuple]) -> bytes:
         + "".join(parts)
         + "</w:body></w:document>"
     )
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as z:
-        z.writestr(
+    return zip_package([
+        (
             "[Content_Types].xml",
             '<?xml version="1.0"?><Types xmlns="http://schemas.'
             'openxmlformats.org/package/2006/content-types">'
@@ -174,32 +175,21 @@ def build_docx(blocks: list[tuple]) -> bytes:
             '<Override PartName="/word/document.xml" ContentType='
             '"application/vnd.openxmlformats-officedocument.'
             'wordprocessingml.document.main+xml"/></Types>',
-        )
-        z.writestr(
+        ),
+        (
             "_rels/.rels",
             '<?xml version="1.0"?><Relationships xmlns="http://schemas.'
             'openxmlformats.org/package/2006/relationships">'
             '<Relationship Id="rId1" Type="http://schemas.openxmlformats'
             '.org/officeDocument/2006/relationships/officeDocument" '
             'Target="word/document.xml"/></Relationships>',
-        )
-        z.writestr("word/document.xml", doc)
-    return buf.getvalue()
+        ),
+        ("word/document.xml", doc),
+    ])
 
 
 def docx_spans(docs: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Arrow-batched DOCX → span rows ``(doc_id, seq, kind, text, level)``
     in document order.  Narrow stage, zero shuffles."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                spans = parse_docx(bytes(p) if p is not None else b"")
-                for s in spans:
-                    rows.append({"doc_id": str(doc_id), **s})
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "seq", "kind", "text", "level"]
-            )
-
-    return docs.mapInPandas(kernel, schema=SPANS_SCHEMA)
+    return parsed_rows(docs, parse_docx, SPANS_SCHEMA, payload_col)

@@ -11,7 +11,7 @@ so the P6 boilerplate stance stays in one place.
 
 Same implementation stance as the OOXML siblings: stdlib ``zipfile`` +
 regex over canonical machine XML (container/OPF files are
-generator-produced), O6 containment, one ``mapInPandas`` Arrow kernel.
+generator-produced), O6 containment, one per-row ``mapInArrow`` kernel.
 """
 
 from __future__ import annotations
@@ -21,8 +21,10 @@ import posixpath
 import re
 import zipfile
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..operators._docwise import parsed_rows
+from ._zip import zip_package
 
 CHAPTERS_SCHEMA = "doc_id string, chapter int, path string, html string"
 
@@ -78,48 +80,36 @@ def build_epub(chapters: list[str], *, opf_dir: str = "OEBPS") -> bytes:
     """Fixture builder: a valid OCF/OPF package with one XHTML chapter
     per entry (the spine deliberately lists chapters in REVERSE zip-member
     order so spine-order resolution is actually exercised)."""
-    buf = io.BytesIO()
     n = len(chapters)
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as z:
-        z.writestr("mimetype", "application/epub+zip")
-        z.writestr(
+    manifest = "".join(
+        f'<item id="c{i}" href="ch{i}.xhtml" '
+        'media-type="application/xhtml+xml"/>'
+        for i in range(n)
+    ) + '<item id="css" href="style.css" media-type="text/css"/>'
+    spine = "".join(f'<itemref idref="c{i}"/>' for i in range(n))
+    return zip_package([
+        ("mimetype", "application/epub+zip"),
+        (
             "META-INF/container.xml",
             '<?xml version="1.0"?><container version="1.0" xmlns="urn:'
             'oasis:names:tc:opendocument:xmlns:container"><rootfiles>'
             f'<rootfile full-path="{opf_dir}/content.opf" media-type='
             '"application/oebps-package+xml"/></rootfiles></container>',
-        )
-        manifest = "".join(
-            f'<item id="c{i}" href="ch{i}.xhtml" '
-            'media-type="application/xhtml+xml"/>'
-            for i in range(n)
-        ) + '<item id="css" href="style.css" media-type="text/css"/>'
-        spine = "".join(f'<itemref idref="c{i}"/>' for i in range(n))
-        z.writestr(
+        ),
+        (
             f"{opf_dir}/content.opf",
             '<?xml version="1.0"?><package xmlns="http://www.idpf.org/'
             '2007/opf" version="3.0"><manifest>' + manifest
             + "</manifest><spine>" + spine + "</spine></package>",
-        )
-        z.writestr(f"{opf_dir}/style.css", "body{}")
-        # write chapter members in reverse so zip order != spine order
-        for i in range(n - 1, -1, -1):
-            z.writestr(f"{opf_dir}/ch{i}.xhtml", chapters[i])
-    return buf.getvalue()
+        ),
+        (f"{opf_dir}/style.css", "body{}"),
+        # chapter members in reverse so zip order != spine order
+        *((f"{opf_dir}/ch{i}.xhtml", chapters[i]) for i in range(n - 1, -1, -1)),
+    ])
 
 
 def epub_chapters(docs: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Arrow-batched EPUB → ``(doc_id, chapter, path, html)`` in spine
     order; feed the ``html`` column to ``operators/html.strip_html``."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                for c in parse_epub(bytes(p) if p is not None else b""):
-                    rows.append({"doc_id": str(doc_id), **c})
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "chapter", "path", "html"]
-            )
-
-    return docs.mapInPandas(kernel, schema=CHAPTERS_SCHEMA)
+    return parsed_rows(docs, parse_epub, CHAPTERS_SCHEMA, payload_col)

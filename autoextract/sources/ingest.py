@@ -17,11 +17,11 @@ from __future__ import annotations
 
 import struct
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators._docwise import map_rows
 from ..operators.multimodal import sniff_format
 
 RAW_DOCS_SCHEMA = T.StructType(
@@ -36,18 +36,13 @@ def sniff(raw_docs: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Attach ``fmt`` via magic bytes — one Arrow-batched pass; only the
     first bytes of each payload are touched."""
 
-    def kernel(batches):
-        for pdf in batches:
-            fmts = [
-                sniff_format(bytes(b) if b is not None else b"")
-                for b in pdf[payload_col]
-            ]
-            out = pdf.copy()
-            out["fmt"] = fmts
-            yield out
+    k = raw_docs.columns.index(payload_col)
+
+    def sniff_row(*row):
+        return (*row, sniff_format(row[k] or b""))
 
     schema = T.StructType(raw_docs.schema.fields + [T.StructField("fmt", T.StringType())])
-    return raw_docs.mapInPandas(kernel, schema=schema)
+    return map_rows(raw_docs, sniff_row, schema)
 
 
 def dispatch(sniffed: DataFrame) -> dict[str, DataFrame]:
@@ -100,32 +95,26 @@ def make_pdf(words: list[str] | None = None) -> bytes:
     return make_text_pdf([[(w, 50.0 + 90.0 * i, 60.0) for i, w in enumerate(ws)]])
 
 
-def gen_raw_docs(
-    spark: SparkSession, n_docs: int, seed: int = 42, partitions: int | None = None
-) -> DataFrame:
+def gen_raw_docs(spark: SparkSession, n_docs: int, seed: int = 42) -> DataFrame:
     """Distributed raw_docs with a deterministic mix of formats."""
     import numpy as np
 
-    parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
+    parts = max(spark.sparkContext.defaultParallelism, 8)
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"].tolist():
-                rng = np.random.RandomState((seed * 7_000_003 + int(i)) % (2**31 - 1))
-                kind = ["png", "jpeg", "gif", "pdf", "html"][int(rng.randint(5))]
-                w, h = int(rng.randint(100, 4000)), int(rng.randint(100, 4000))
-                payload = {
-                    "png": lambda: make_png(w, h),
-                    "jpeg": lambda: make_jpeg(w, h),
-                    "gif": lambda: make_gif(w % 65535, h % 65535),
-                    "pdf": lambda: make_pdf([f"doc{i}", "pdf", "body", "words"]),
-                    "html": lambda: (
-                        "<html><body><article><p>doc %d body text</p></article>"
-                        "</body></html>" % i
-                    ).encode(),
-                }[kind]()
-                rows.append({"doc_id": f"raw-{seed}-{int(i):09d}", "payload": payload})
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
+    def raw_doc(i):
+        rng = np.random.RandomState((seed * 7_000_003 + i) % (2**31 - 1))
+        kind = ["png", "jpeg", "gif", "pdf", "html"][int(rng.randint(5))]
+        w, h = int(rng.randint(100, 4000)), int(rng.randint(100, 4000))
+        payload = {
+            "png": lambda: make_png(w, h),
+            "jpeg": lambda: make_jpeg(w, h),
+            "gif": lambda: make_gif(w % 65535, h % 65535),
+            "pdf": lambda: make_pdf([f"doc{i}", "pdf", "body", "words"]),
+            "html": lambda: (
+                "<html><body><article><p>doc %d body text</p></article>"
+                "</body></html>" % i
+            ).encode(),
+        }[kind]()
+        return f"raw-{seed}-{i:09d}", payload
 
-    return spark.range(n_docs).repartition(parts).mapInPandas(kernel, schema=RAW_DOCS_SCHEMA)
+    return map_rows(spark.range(n_docs).repartition(parts), raw_doc, RAW_DOCS_SCHEMA)

@@ -25,7 +25,7 @@ The span mapping composes existing legs rather than re-inventing them
 Containment (O6): payloads that aren't JSON, lack a ``cells`` list, or
 declare ``nbformat`` < 4 yield zero spans.
 
-Spark shape: one ``mapInPandas`` Arrow kernel over the binary column —
+Spark shape: one per-row ``mapInArrow`` kernel over the binary column —
 narrow, zero shuffles, data-parallel at 10^12-doc scale.
 """
 
@@ -33,9 +33,9 @@ from __future__ import annotations
 
 import json
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
+from autoextract.operators._docwise import parsed_rows
 from autoextract.sources.markdown import parse_markdown
 
 SPANS_SCHEMA = (
@@ -148,16 +148,4 @@ def ipynb_spans(docs: DataFrame, payload_col: str = "payload") -> DataFrame:
     text, level, media_ref)`` in document order.  Narrow stage, zero
     shuffles."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                for s in parse_ipynb(bytes(p) if p is not None else b""):
-                    rows.append({"doc_id": str(doc_id), **s})
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "cell", "seq", "kind", "text", "level",
-                         "media_ref"],
-            )
-
-    return docs.mapInPandas(kernel, schema=SPANS_SCHEMA)
+    return parsed_rows(docs, parse_ipynb, SPANS_SCHEMA, payload_col)

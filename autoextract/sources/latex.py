@@ -27,7 +27,7 @@ LaTeX2e semantics:
 Containment (O6): payloads without a ``\\documentclass`` or
 ``\\begin{document}`` marker yield zero spans, as do undecodable ones.
 
-Spark shape: one ``mapInPandas`` Arrow kernel over the binary column —
+Spark shape: one per-row ``mapInArrow`` kernel over the binary column —
 narrow, zero shuffles, data-parallel at 10^12-doc scale.
 """
 
@@ -35,8 +35,9 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..operators._docwise import parsed_rows
 
 SPANS_SCHEMA = (
     "doc_id string, seq int, kind string, text string, level int,"
@@ -260,16 +261,4 @@ def latex_spans(docs: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Arrow-batched LaTeX → span rows ``(doc_id, seq, kind, text, level,
     media_ref)`` in document order.  Narrow stage, zero shuffles."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                for s in parse_latex(bytes(p) if p is not None else b""):
-                    rows.append({"doc_id": str(doc_id), **s})
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "seq", "kind", "text", "level",
-                         "media_ref"],
-            )
-
-    return docs.mapInPandas(kernel, schema=SPANS_SCHEMA)
+    return parsed_rows(docs, parse_latex, SPANS_SCHEMA, payload_col)

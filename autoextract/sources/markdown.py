@@ -35,7 +35,7 @@ specs that a text-extraction pipeline needs:
 Containment (O6): payloads that don't decode as UTF-8 yield zero
 spans, as do empty/whitespace-only ones.
 
-Spark shape: one ``mapInPandas`` Arrow kernel over the binary column —
+Spark shape: one per-row ``mapInArrow`` kernel over the binary column —
 narrow, zero shuffles, data-parallel at 10^12-doc scale.
 """
 
@@ -43,8 +43,9 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..operators._docwise import parsed_rows
 
 SPANS_SCHEMA = (
     "doc_id string, seq int, kind string, text string, level int,"
@@ -287,19 +288,7 @@ def markdown_spans(docs: DataFrame, payload_col: str = "payload"
     level, media_ref)`` in document order.  Narrow stage, zero
     shuffles."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                for s in parse_markdown(bytes(p) if p is not None else b""):
-                    rows.append({"doc_id": str(doc_id), **s})
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "seq", "kind", "text", "level",
-                         "media_ref"],
-            )
-
-    return docs.mapInPandas(kernel, schema=SPANS_SCHEMA)
+    return parsed_rows(docs, parse_markdown, SPANS_SCHEMA, payload_col)
 
 
 # ----------------------------------------------------------------------
@@ -385,16 +374,7 @@ def front_matter(docs: DataFrame, payload_col: str = "payload"
     """Arrow-batched front-matter extraction → one row per document.
     Narrow stage, zero shuffles."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                m = parse_front_matter(bytes(p) if p is not None else b"")
-                rows.append({"doc_id": str(doc_id), **m})
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "title", "date", "draft", "tags_csv",
-                         "n_meta", "body_first_line"],
-            )
+    def front_matter_record(payload):
+        return [parse_front_matter(payload)]
 
-    return docs.mapInPandas(kernel, schema=FRONT_MATTER_SCHEMA)
+    return parsed_rows(docs, front_matter_record, FRONT_MATTER_SCHEMA, payload_col)

@@ -28,7 +28,7 @@ Containment (O6): payloads that don't start with a ``From `` separator
 yield zero rows; a message whose MIME structure is malformed yields its
 raw (undecoded) body rather than failing the task.
 
-Spark shape: one ``mapInPandas`` Arrow kernel over the binary column —
+Spark shape: one per-row ``mapInArrow`` kernel over the binary column —
 narrow, zero shuffles; each mailbox is independent work, data-parallel
 at 10^12-doc scale.
 """
@@ -40,8 +40,9 @@ import binascii
 import quopri
 import re
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..operators._docwise import parsed_rows
 
 MESSAGES_SCHEMA = (
     "doc_id string, msg_idx int, from_addr string, subject string,"
@@ -288,16 +289,4 @@ def mbox_messages(docs: DataFrame, payload_col: str = "payload"
     subject, date_ts, message_id, body)``.  Narrow stage, zero
     shuffles."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                for r in parse_mbox(bytes(p) if p is not None else b""):
-                    rows.append({"doc_id": str(doc_id), **r})
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "msg_idx", "from_addr", "subject",
-                         "date_ts", "message_id", "body"],
-            )
-
-    return docs.mapInPandas(kernel, schema=MESSAGES_SCHEMA)
+    return parsed_rows(docs, parse_mbox, MESSAGES_SCHEMA, payload_col)

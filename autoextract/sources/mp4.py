@@ -21,7 +21,7 @@ From-scratch per ISO/IEC 14496-12 (public spec):
   * ``trak``/``mdia``/``hdlr`` — handler fourcc (``vide``/``soun``/…), in
     track order.
 
-Spark shape: one ``mapInPandas`` kernel, narrow (zero shuffles), Arrow
+Spark shape: one per-row ``mapInArrow`` kernel, narrow (zero shuffles), Arrow
 batches in and out, per-row O6 containment (a torn file yields a
 ``valid=false`` row, never a task failure). Reference parity: the reference
 whitelists uploads and never reads video (``schema_service.py:225-227``) —
@@ -33,8 +33,9 @@ from __future__ import annotations
 import struct
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..operators._docwise import map_rows
 
 
 class Mp4Error(ValueError):
@@ -239,37 +240,14 @@ def mp4_meta_table(
     shuffles; malformed/non-BMFF payloads → valid=false with NULL fields
     (O6 containment, same contract as the EXIF/ID3 kernels)."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                base = {
-                    "doc_id": int(did), "valid": False, "major_brand": None,
-                    "duration_ms": None, "n_tracks": None,
-                    "video_width": None, "video_height": None,
-                    "handlers": None,
-                }
-                try:
-                    b = bytes(payload) if payload is not None else b""
-                    meta = parse_mp4_meta(b)
-                    base.update(
-                        valid=True,
-                        major_brand=meta["major_brand"],
-                        duration_ms=meta["duration_ms"],
-                        n_tracks=meta["n_tracks"],
-                        video_width=meta["video_width"],
-                        video_height=meta["video_height"],
-                        handlers=meta["handlers"],
-                    )
-                except Exception:
-                    pass
-                rows.append(base)
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "valid", "major_brand", "duration_ms",
-                    "n_tracks", "video_width", "video_height", "handlers",
-                ],
+    def mp4_meta_row(did, payload):
+        try:
+            m = parse_mp4_meta(payload or b"")
+            return (
+                int(did), True, m["major_brand"], m["duration_ms"], m["n_tracks"],
+                m["video_width"], m["video_height"], m["handlers"],
             )
+        except Exception:
+            return (int(did), False, None, None, None, None, None, None)
 
-    return media.mapInPandas(kernel, schema=MP4_META_SCHEMA)
+    return map_rows(media.select(id_col, payload_col), mp4_meta_row, MP4_META_SCHEMA)

@@ -22,7 +22,7 @@ Parsing is regex-over-XML on machine-generated markup (the same stance
 as the DOCX/sitemap/feed parsers).  Malformed payloads yield zero
 spans (O6 containment).
 
-Spark shape: one ``mapInPandas`` Arrow kernel over the binary column —
+Spark shape: one per-row ``mapInArrow`` kernel over the binary column —
 narrow, zero shuffles; the ZIP inflate is stdlib C speed.
 """
 
@@ -32,8 +32,10 @@ import io
 import re
 import zipfile
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..operators._docwise import parsed_rows
+from ._zip import zip_package
 
 SPANS_SCHEMA = (
     "doc_id string, seq int, kind string, text string, level int,"
@@ -183,29 +185,14 @@ def build_odt(blocks: list[tuple]) -> bytes:
         ':1.0" office:version="1.2">'
         "<office:body><office:text>%s</office:text></office:body>"
         "</office:document-content>" % "".join(parts))
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as z:
-        z.writestr("mimetype",
-                   "application/vnd.oasis.opendocument.text",
-                   compress_type=zipfile.ZIP_STORED)
-        z.writestr("content.xml", content)
-    return buf.getvalue()
+    return zip_package(
+        [("mimetype", "application/vnd.oasis.opendocument.text"), ("content.xml", content)],
+        stored=("mimetype",),
+    )
 
 
 def odt_spans(docs: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Arrow-batched ODT → span rows ``(doc_id, seq, kind, text, level,
     media_ref)`` in document order.  Narrow stage, zero shuffles."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                for s in parse_odt(bytes(p) if p is not None else b""):
-                    rows.append({"doc_id": str(doc_id), **s})
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "seq", "kind", "text", "level",
-                         "media_ref"],
-            )
-
-    return docs.mapInPandas(kernel, schema=SPANS_SCHEMA)
+    return parsed_rows(docs, parse_odt, SPANS_SCHEMA, payload_col)

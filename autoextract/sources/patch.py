@@ -24,7 +24,7 @@ A malformed hunk body (declared counts not matching counted lines)
 flips ``valid`` to false on that file's rows rather than failing the
 task (O6).
 
-Spark shape: one ``mapInPandas`` Arrow kernel over the binary column —
+Spark shape: one per-row ``mapInArrow`` kernel over the binary column —
 narrow, zero shuffles, data-parallel at 10^12-doc scale.
 """
 
@@ -32,8 +32,9 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..operators._docwise import parsed_rows
 
 HUNKS_SCHEMA = (
     "doc_id string, file_idx int, old_path string, new_path string,"
@@ -211,18 +212,4 @@ def patch_hunks(docs: DataFrame, payload_col: str = "payload"
                 ) -> DataFrame:
     """Arrow-batched patch → hunk rows.  Narrow stage, zero shuffles."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                for r in parse_patch(bytes(p) if p is not None else b""):
-                    rows.append({"doc_id": str(doc_id), **r})
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "file_idx", "old_path", "new_path",
-                         "is_binary", "hunk_idx", "old_start", "old_count",
-                         "new_start", "new_count", "n_added", "n_deleted",
-                         "body", "valid"],
-            )
-
-    return docs.mapInPandas(kernel, schema=HUNKS_SCHEMA)
+    return parsed_rows(docs, parse_patch, HUNKS_SCHEMA, payload_col)

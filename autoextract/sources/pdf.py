@@ -40,8 +40,9 @@ import base64
 import re
 import zlib
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..operators._docwise import flat_map_rows, map_rows
 
 #: US-Letter page, PDF default user space (1/72 inch units)
 PAGE_W, PAGE_H = 612.0, 792.0
@@ -1640,56 +1641,36 @@ def pdf_words_table(pdfs: DataFrame, payload_col: str = "payload") -> DataFrame:
     over-cap documents contribute zero rows here and an error row in
     ``pdf_meta`` (O6 containment)."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows: list[dict] = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                b = bytes(payload) if payload is not None else b""
-                try:
-                    rows.extend(pdf_word_rows(str(doc_id), b))
-                except Exception:
-                    continue
-            yield pd.DataFrame(rows, columns=_WORD_COLS)
+    def pdf_words(doc_id, payload):
+        try:
+            rows = pdf_word_rows(str(doc_id), payload or b"")
+        except Exception:
+            return []
+        return [tuple(r[c] for c in _WORD_COLS) for r in rows]
 
-    return pdfs.mapInPandas(kernel, schema=PDF_WORDS_DDL)
+    return flat_map_rows(pdfs.select("doc_id", payload_col), pdf_words, PDF_WORDS_DDL)
 
 
 def pdf_meta(pdfs: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Per-document parse status: page count, validity, error message — the
     engine's analogue of the reference's failed-status row (pdf.py:97-109)."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                b = bytes(payload) if payload is not None else b""
-                try:
-                    n_pages = pdf_page_count(b)
-                except Exception as exc:  # O6: adversarial bytes → error row
-                    rows.append(
-                        {"doc_id": str(doc_id), "n_pages": 0, "valid": False,
-                         "error": f"parse failure: {exc}"[:200]}
-                    )
-                    continue
-                if n_pages == 0:
-                    rows.append(
-                        {"doc_id": str(doc_id), "n_pages": 0, "valid": False,
-                         "error": "no parseable pages"}
-                    )
-                elif n_pages > MAX_PAGES:
-                    rows.append(
-                        {"doc_id": str(doc_id), "n_pages": n_pages, "valid": False,
-                         "error": f"PDF has too many pages ({n_pages}). "
-                                  f"Maximum supported: {MAX_PAGES}"}
-                    )
-                else:
-                    rows.append(
-                        {"doc_id": str(doc_id), "n_pages": n_pages, "valid": True,
-                         "error": None}
-                    )
-            yield pd.DataFrame(rows, columns=["doc_id", "n_pages", "valid", "error"])
+    def pdf_meta_row(doc_id, payload):
+        doc_id = str(doc_id)
+        try:
+            n_pages = pdf_page_count(payload or b"")
+        except Exception as exc:  # O6: adversarial bytes → error row
+            return doc_id, 0, False, f"parse failure: {exc}"[:200]
+        if n_pages == 0:
+            return doc_id, 0, False, "no parseable pages"
+        if n_pages > MAX_PAGES:
+            return (
+                doc_id, n_pages, False,
+                f"PDF has too many pages ({n_pages}). Maximum supported: {MAX_PAGES}",
+            )
+        return doc_id, n_pages, True, None
 
-    return pdfs.mapInPandas(kernel, schema=PDF_META_DDL)
+    return map_rows(pdfs.select("doc_id", payload_col), pdf_meta_row, PDF_META_DDL)
 
 
 def render_docs_to_pdf(
@@ -1721,49 +1702,42 @@ def render_docs_to_pdf(
     RC4-encrypts each file with the standard security handler (V1/R2, empty
     user password) — the ``pdf_encrypted_ingest`` query's shape."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                toks = str(text or "").split()[:max_tokens]
-                pages: list[list[tuple[str, float, float]]] = []
-                for i, tok in enumerate(toks):
-                    line = i // words_per_line
-                    page_i, line_in_page = divmod(line, lines_per_page)
-                    while len(pages) <= page_i:
-                        pages.append([])
-                    x = 50.0 + (i % words_per_line) * 90.0
-                    y = 60.0 + line_in_page * 40.0
-                    pages[page_i].append((tok, x, y))
-                comp = compress
-                if compress == "mixed":
-                    comp = [True, "lzw", "a85+flate", "rle"][
-                        int(str(doc_id)[-1] or 0) % 4
-                        if str(doc_id)[-1].isdigit()
-                        else 0
-                    ]
-                payload = make_text_pdf(
-                    pages or [[]], compress=comp, use_tm=use_tm, font=font
-                )
-                if modern:
-                    payload = to_objstm_pdf(payload)
-                if encrypt == "mixed":
-                    # rotate the four cheap handler revisions per doc: RC4
-                    # 40/128-bit, AES-128 (AESV2), AES-256 (AESV3 R5). R6's
-                    # deliberately-slow 2.B hardening has its own small-set
-                    # driver query (pdf_aes256_ingest).
-                    d = str(doc_id)[-1]
-                    rev = (2, 3, 4, 5)[int(d) % 4 if d.isdigit() else 0]
-                    payload = encrypt_pdf(payload, revision=rev)
-                elif encrypt == "aes256r6":
-                    payload = encrypt_pdf(payload, revision=6)
-                elif encrypt:
-                    payload = encrypt_pdf(payload)
-                rows.append({"doc_id": str(doc_id), "payload": payload})
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
+    def render_pdf(doc_id, text):
+        doc_id = str(doc_id)
+        toks = str(text or "").split()[:max_tokens]
+        pages: list[list[tuple[str, float, float]]] = []
+        for i, tok in enumerate(toks):
+            line = i // words_per_line
+            page_i, line_in_page = divmod(line, lines_per_page)
+            while len(pages) <= page_i:
+                pages.append([])
+            x = 50.0 + (i % words_per_line) * 90.0
+            y = 60.0 + line_in_page * 40.0
+            pages[page_i].append((tok, x, y))
+        comp = compress
+        if compress == "mixed":
+            comp = [True, "lzw", "a85+flate", "rle"][
+                int(doc_id[-1] or 0) % 4 if doc_id[-1].isdigit() else 0
+            ]
+        payload = make_text_pdf(pages or [[]], compress=comp, use_tm=use_tm, font=font)
+        if modern:
+            payload = to_objstm_pdf(payload)
+        if encrypt == "mixed":
+            # rotate the four cheap handler revisions per doc: RC4
+            # 40/128-bit, AES-128 (AESV2), AES-256 (AESV3 R5). R6's
+            # deliberately-slow 2.B hardening has its own small-set
+            # query (pdf_aes256_ingest).
+            d = doc_id[-1]
+            rev = (2, 3, 4, 5)[int(d) % 4 if d.isdigit() else 0]
+            payload = encrypt_pdf(payload, revision=rev)
+        elif encrypt == "aes256r6":
+            payload = encrypt_pdf(payload, revision=6)
+        elif encrypt:
+            payload = encrypt_pdf(payload)
+        return doc_id, payload
 
-    return docs.select("doc_id", text_col).mapInPandas(
-        kernel, schema="doc_id string, payload binary"
+    return map_rows(
+        docs.select("doc_id", text_col), render_pdf, "doc_id string, payload binary"
     )
 
 
@@ -1874,28 +1848,17 @@ def pdf_media_table(pdfs: DataFrame, payload_col: str = "payload") -> DataFrame:
 
     schema = "doc_id string, media_ref string, payload binary, fmt string"
 
-    def kernel(batches):
-        for pdf in batches:
-            rows: list[dict] = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                b = bytes(payload) if payload is not None else b""
-                try:  # O6: adversarial bytes → zero rows, never task failure
-                    if pdf_page_count(b) > MAX_PAGES:
-                        continue
-                    media_list = pdf_media_payloads(b)
-                except Exception:
-                    continue
-                for k, media in enumerate(media_list):
-                    rows.append(
-                        {
-                            "doc_id": str(doc_id),
-                            "media_ref": f"pdf:{doc_id}:{k}",
-                            "payload": media,
-                            "fmt": sniff_format(media),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "media_ref", "payload", "fmt"]
-            )
+    def pdf_media(doc_id, payload):
+        b = payload or b""
+        try:  # O6: adversarial bytes → zero rows, never task failure
+            if pdf_page_count(b) > MAX_PAGES:
+                return []
+            media_list = pdf_media_payloads(b)
+        except Exception:
+            return []
+        return [
+            (str(doc_id), f"pdf:{doc_id}:{k}", media, sniff_format(media))
+            for k, media in enumerate(media_list)
+        ]
 
-    return pdfs.mapInPandas(kernel, schema=schema)
+    return flat_map_rows(pdfs.select("doc_id", payload_col), pdf_media, schema)

@@ -8,7 +8,7 @@ order is not meaningful); within a slide, shape/paragraph document order
 is preserved.
 
 Same stance as the siblings: stdlib ``zipfile`` + regex over canonical
-machine XML, O6 containment, one ``mapInPandas`` Arrow kernel.
+machine XML, O6 containment, one per-row ``mapInArrow`` kernel.
 """
 
 from __future__ import annotations
@@ -17,8 +17,10 @@ import io
 import re
 import zipfile
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..operators._docwise import parsed_rows
+from ._zip import zip_package
 
 SLIDES_SCHEMA = "doc_id string, slide int, seq int, text string"
 
@@ -64,42 +66,30 @@ def _escape(s: str) -> str:
 
 def build_pptx(slides: list[list[str]]) -> bytes:
     """Fixture builder: one slide part per paragraph list."""
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as z:
-        z.writestr(
-            "[Content_Types].xml",
-            '<?xml version="1.0"?><Types xmlns="http://schemas.'
-            'openxmlformats.org/package/2006/content-types">'
-            '<Default Extension="xml" ContentType="application/xml"/>'
-            "</Types>",
+    members = [(
+        "[Content_Types].xml",
+        '<?xml version="1.0"?><Types xmlns="http://schemas.'
+        'openxmlformats.org/package/2006/content-types">'
+        '<Default Extension="xml" ContentType="application/xml"/>'
+        "</Types>",
+    )]
+    for i, paras in enumerate(slides, 1):
+        body = "".join(
+            f"<a:p><a:r><a:t>{_escape(t)}</a:t></a:r></a:p>" for t in paras
         )
-        for i, paras in enumerate(slides, 1):
-            body = "".join(
-                f"<a:p><a:r><a:t>{_escape(t)}</a:t></a:r></a:p>" for t in paras
-            )
-            z.writestr(
-                f"ppt/slides/slide{i}.xml",
-                '<?xml version="1.0"?><p:sld xmlns:p="http://schemas.'
-                'openxmlformats.org/presentationml/2006/main" xmlns:a='
-                '"http://schemas.openxmlformats.org/drawingml/2006/main">'
-                f"<p:cSld><p:spTree><p:sp><p:txBody>{body}</p:txBody>"
-                "</p:sp></p:spTree></p:cSld></p:sld>",
-            )
-    return buf.getvalue()
+        members.append((
+            f"ppt/slides/slide{i}.xml",
+            '<?xml version="1.0"?><p:sld xmlns:p="http://schemas.'
+            'openxmlformats.org/presentationml/2006/main" xmlns:a='
+            '"http://schemas.openxmlformats.org/drawingml/2006/main">'
+            f"<p:cSld><p:spTree><p:sp><p:txBody>{body}</p:txBody>"
+            "</p:sp></p:spTree></p:cSld></p:sld>",
+        ))
+    return zip_package(members)
 
 
 def pptx_slides(docs: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Arrow-batched PPTX → ``(doc_id, slide, seq, text)``.  Narrow stage,
     zero shuffles."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                for s in parse_pptx(bytes(p) if p is not None else b""):
-                    rows.append({"doc_id": str(doc_id), **s})
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "slide", "seq", "text"]
-            )
-
-    return docs.mapInPandas(kernel, schema=SLIDES_SCHEMA)
+    return parsed_rows(docs, parse_pptx, SLIDES_SCHEMA, payload_col)

@@ -26,7 +26,7 @@ level)`` with kind ∈ {heading, text, table, image} — identical to the
 DOCX/PPTX legs, so the span pipeline downstream is format-agnostic.
 Malformed payloads yield zero spans (O6 containment).
 
-Spark shape: one ``mapInPandas`` Arrow kernel over the binary column —
+Spark shape: one per-row ``mapInArrow`` kernel over the binary column —
 narrow, zero shuffles, trivially data-parallel at 10^12-doc scale.
 """
 
@@ -34,8 +34,9 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..operators._docwise import parsed_rows
 
 SPANS_SCHEMA = (
     "doc_id string, seq int, kind string, text string, level int"
@@ -246,14 +247,4 @@ def rtf_spans(docs: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Arrow-batched RTF → span rows ``(doc_id, seq, kind, text, level)``
     in document order.  Narrow stage, zero shuffles."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                for s in parse_rtf(bytes(p) if p is not None else b""):
-                    rows.append({"doc_id": str(doc_id), **s})
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "seq", "kind", "text", "level"]
-            )
-
-    return docs.mapInPandas(kernel, schema=SPANS_SCHEMA)
+    return parsed_rows(docs, parse_rtf, SPANS_SCHEMA, payload_col)

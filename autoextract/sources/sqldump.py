@@ -22,8 +22,9 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..operators._docwise import flat_map_rows
 
 _INSERT_RE = re.compile(
     r"INSERT\s+INTO\s+`?(\w+)`?\s*(?:\([^)]*\)\s*)?VALUES\s*", re.I
@@ -175,30 +176,16 @@ def sqldump_rows_table(
     convention keeps the gate on flat strings). Narrow Arrow stage, zero
     shuffles; an unparseable payload contributes zero rows."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for did, sql in zip(pdf[id_col], pdf[sql_col]):
-                try:
-                    for r in parse_sqldump(str(sql) if sql is not None else ""):
-                        rows.append({
-                            "doc_id": int(did),
-                            "table_name": r["table"],
-                            "row_idx": r["row_idx"],
-                            "n_values": len(r["values"]),
-                            "values_tsv": "\t".join(
-                                NULL_MARK if v is None else v
-                                for v in r["values"]
-                            ),
-                        })
-                except Exception:
-                    continue
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "table_name", "row_idx", "n_values",
-                    "values_tsv",
-                ],
-            )
+    def sqldump_rows(did, sql):
+        rows = []
+        try:  # a payload that fails part-way keeps the rows parsed so far
+            for r in parse_sqldump(str(sql) if sql is not None else ""):
+                rows.append((
+                    int(did), r["table"], r["row_idx"], len(r["values"]),
+                    "\t".join(NULL_MARK if v is None else v for v in r["values"]),
+                ))
+        except Exception:
+            pass
+        return rows
 
-    return docs.mapInPandas(kernel, schema=SQLDUMP_SCHEMA)
+    return flat_map_rows(docs.select(id_col, sql_col), sqldump_rows, SQLDUMP_SCHEMA)

@@ -22,7 +22,7 @@ magic → VTT rules, else SRT rules.
 Containment (O6): payloads with no parseable timing line yield zero
 rows; a malformed cue mid-stream is skipped, not fatal.
 
-Spark shape: one ``mapInPandas`` Arrow kernel over the binary column —
+Spark shape: one per-row ``mapInArrow`` kernel over the binary column —
 narrow, zero shuffles.
 """
 
@@ -30,8 +30,9 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..operators._docwise import parsed_rows
 
 CUES_SCHEMA = (
     "doc_id string, cue int, start_ms bigint, end_ms bigint, text string"
@@ -126,16 +127,4 @@ def subtitle_cues(docs: DataFrame, payload_col: str = "payload"
     """Arrow-batched subtitle parse → cue rows.  Narrow stage, zero
     shuffles."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                for c in parse_subtitles(bytes(p) if p is not None
-                                         else b""):
-                    rows.append({"doc_id": str(doc_id), **c})
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "cue", "start_ms", "end_ms", "text"],
-            )
-
-    return docs.mapInPandas(kernel, schema=CUES_SCHEMA)
+    return parsed_rows(docs, parse_subtitles, CUES_SCHEMA, payload_col)

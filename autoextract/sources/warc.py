@@ -14,7 +14,7 @@ clean body bytes.
 
 Design notes (100 TB):
 - A WARC segment parses independently of every other segment, so the stage
-  is narrow (mapInPandas, zero shuffles) and scales linearly with input
+  is narrow (a per-row mapInArrow stage, zero shuffles) and scales linearly with input
   splits. Record extraction is sequential *within* one file by format
   design (Common Crawl segments are ~1 GB for exactly this reason).
 - Per-file error containment (SURVEY §2.7 O6): a malformed segment yields
@@ -35,9 +35,10 @@ from __future__ import annotations
 import gzip
 import zlib
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..operators._docwise import flat_map_rows, map_rows
 
 CRLF = b"\r\n"
 
@@ -180,20 +181,12 @@ def render_docs_to_html(docs: DataFrame, text_col: str = "text") -> DataFrame:
     page plus the base URI it was 'fetched' from — the shape
     ``operators.html.extract_links`` consumes."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = [
-                {
-                    "doc_id": str(doc_id),
-                    "html": doc_html_page(str(doc_id), text),
-                    "base_url": f"https://example.org/{doc_id}",
-                }
-                for doc_id, text in zip(pdf["doc_id"], pdf[text_col])
-            ]
-            yield pd.DataFrame(rows, columns=["doc_id", "html", "base_url"])
+    def render_html(doc_id, text):
+        return str(doc_id), doc_html_page(str(doc_id), text), f"https://example.org/{doc_id}"
 
-    return docs.mapInPandas(
-        kernel, schema="doc_id string, html string, base_url string"
+    return map_rows(
+        docs.select("doc_id", text_col), render_html,
+        "doc_id string, html string, base_url string",
     )
 
 
@@ -209,25 +202,18 @@ def render_docs_to_warc(
     layouts = ["plain", "gzip", "members"]
     encodings = ["identity", "chunked", "gzip"]
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                n = int(str(doc_id).split("-")[-1]) if str(doc_id)[-1].isdigit() else 0
-                body = doc_html_page(str(doc_id), text) if as_html else text
-                rows.append(
-                    {
-                        "doc_id": str(doc_id),
-                        "content": build_warc_segment(
-                            str(doc_id), body,
-                            layouts[n % 3], encodings[(n // 3) % 3],
-                            mime="text/html" if as_html else "text/plain",
-                        ),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def render_warc(doc_id, text):
+        doc_id = str(doc_id)
+        n = int(doc_id.split("-")[-1]) if doc_id[-1].isdigit() else 0
+        body = doc_html_page(doc_id, text) if as_html else text
+        return doc_id, build_warc_segment(
+            doc_id, body, layouts[n % 3], encodings[(n // 3) % 3],
+            mime="text/html" if as_html else "text/plain",
+        )
 
-    return docs.mapInPandas(kernel, schema="doc_id string, content binary")
+    return map_rows(
+        docs.select("doc_id", text_col), render_warc, "doc_id string, content binary"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -349,32 +335,24 @@ def parse_warc_bytes(doc_id: str, buf: bytes) -> list[dict]:
 
 def warc_records(raw: DataFrame, content_col: str = "content") -> DataFrame:
     """``(doc_id, content)`` → one row per WARC record (see
-    ``WARC_RECORDS_SCHEMA``). Narrow stage, Arrow-batched, one Python call
-    per partition batch; malformed segments become ``valid=false`` rows."""
+    ``WARC_RECORDS_SCHEMA``). Narrow per-row Arrow stage, one Python call
+    per segment; malformed segments become ``valid=false`` rows."""
     cols = [
         "doc_id", "rec_seq", "warc_type", "target_uri", "warc_date",
         "http_status", "mime", "charset", "body", "valid", "err",
     ]
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, buf in zip(pdf["doc_id"], pdf[content_col]):
-                try:
-                    rows.extend(parse_warc_bytes(str(doc_id), bytes(buf)))
-                except Exception as exc:  # O6 containment
-                    rows.append(
-                        {
-                            "doc_id": str(doc_id), "rec_seq": 0,
-                            "warc_type": "", "target_uri": "",
-                            "warc_date": "", "http_status": 0, "mime": "",
-                            "charset": "", "body": b"", "valid": False,
-                            "err": f"{type(exc).__name__}: {exc}"[:200],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def warc_record_rows(doc_id, buf):
+        try:
+            recs = parse_warc_bytes(str(doc_id), bytes(buf))
+        except Exception as exc:  # O6 containment
+            return [(
+                str(doc_id), 0, "", "", "", 0, "", "", b"", False,
+                f"{type(exc).__name__}: {exc}"[:200],
+            )]
+        return [tuple(map(r.get, cols)) for r in recs]
 
-    return raw.mapInPandas(kernel, schema=WARC_RECORDS_SCHEMA)
+    return flat_map_rows(raw.select("doc_id", content_col), warc_record_rows, WARC_RECORDS_SCHEMA)
 
 
 #: declared charset → JVM charset name for the decode dispatch; anything

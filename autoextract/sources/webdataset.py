@@ -13,7 +13,7 @@ The sample key is the member basename up to the FIRST dot (so
 per the convention); directories inside the tar are ignored.  stdlib
 ``tarfile`` does the framing; malformed payloads yield zero rows (O6).
 
-Spark shape: one ``mapInPandas`` Arrow kernel over the binary shard
+Spark shape: one per-row ``mapInArrow`` kernel over the binary shard
 column — narrow, zero shuffles; a real run points ``binaryFile`` at the
 shard directory and each task streams its own shards.
 """
@@ -24,8 +24,9 @@ import io
 import posixpath
 import tarfile
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..operators._docwise import parsed_rows
 
 MEMBERS_SCHEMA = (
     "doc_id string, sample_key string, ext string, payload binary, "
@@ -79,15 +80,4 @@ def wds_members(shards: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Arrow-batched shard split: ``(doc_id, sample_key, ext, payload,
     n_bytes)`` per member.  Narrow stage, zero shuffles."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                for m in parse_wds_tar(bytes(p) if p is not None else b""):
-                    rows.append({"doc_id": str(doc_id), **m})
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "sample_key", "ext", "payload", "n_bytes"],
-            )
-
-    return shards.mapInPandas(kernel, schema=MEMBERS_SCHEMA)
+    return parsed_rows(shards, parse_wds_tar, MEMBERS_SCHEMA, payload_col)

@@ -16,7 +16,7 @@ shape and flattens the wikitext into training text:
   * ``== Heading ==`` fences stripped, heading text kept;
   * HTML comments dropped, entities unescaped, blank runs collapsed.
 
-Spark shape: one narrow Arrow-batched ``mapInPandas`` stage (regex loops
+Spark shape: one narrow per-row ``mapInArrow`` stage (regex loops
 are per-row, same stance as the HTML/RTF/LaTeX kernels), zero shuffles,
 O6 containment — a torn dump yields zero rows for that payload, never a
 task failure. Namespace filtering (``ns == 0`` for articles) is a plain
@@ -28,8 +28,9 @@ from __future__ import annotations
 import html
 import re
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..operators._docwise import flat_map_rows
 
 _PAGE_RE = re.compile(r"<page>(.*?)</page>", re.S)
 _TITLE_RE = re.compile(r"<title>(.*?)</title>", re.S)
@@ -134,28 +135,16 @@ def wiki_pages_table(
     all dump payloads — narrow Arrow stage, zero shuffles, O6 containment
     (an unparseable payload contributes zero rows)."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for did, xml in zip(pdf[id_col], pdf[xml_col]):
-                try:
-                    for p in parse_wikidump(str(xml) if xml is not None else ""):
-                        rows.append({
-                            "doc_id": int(did),
-                            "page_id": p["page_id"],
-                            "title": p["title"],
-                            "ns": p["ns"],
-                            "redirect": p["redirect"],
-                            "clean_text": p["clean_text"],
-                        })
-                except Exception:
-                    continue
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "page_id", "title", "ns", "redirect",
-                    "clean_text",
-                ],
-            )
+    def wiki_page_rows(did, xml):
+        rows = []
+        try:
+            for p in parse_wikidump(str(xml) if xml is not None else ""):
+                rows.append((
+                    int(did), p["page_id"], p["title"], p["ns"], p["redirect"],
+                    p["clean_text"],
+                ))
+        except Exception:
+            pass
+        return rows
 
-    return docs.mapInPandas(kernel, schema=WIKI_SCHEMA)
+    return flat_map_rows(docs.select(id_col, xml_col), wiki_page_rows, WIKI_SCHEMA)

@@ -12,7 +12,7 @@ for the text-extraction purpose.
 
 Same stance as the DOCX/sitemap parsers: regex over machine-generated
 canonical XML, stdlib ``zipfile`` inflate, O6 containment (malformed
-payloads yield zero cells).  One ``mapInPandas`` Arrow kernel, zero
+payloads yield zero cells).  One per-row ``mapInArrow`` kernel, zero
 shuffles.
 """
 
@@ -22,8 +22,10 @@ import io
 import re
 import zipfile
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..operators._docwise import parsed_rows
+from ._zip import zip_package
 
 CELLS_SCHEMA = "doc_id string, row int, col int, value string, is_number boolean"
 
@@ -148,33 +150,23 @@ def build_xlsx(rows: list[list], inline_strings: bool = False) -> bytes:
         + "".join(f"<si><t>{_escape(s)}</t></si>" for s in shared)
         + "</sst>"
     )
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as z:
-        z.writestr(
+    members = [
+        (
             "[Content_Types].xml",
             '<?xml version="1.0"?><Types xmlns="http://schemas.'
             'openxmlformats.org/package/2006/content-types">'
             '<Default Extension="xml" ContentType="application/xml"/>'
             "</Types>",
-        )
-        z.writestr("xl/worksheets/sheet1.xml", sheet)
-        if shared:
-            z.writestr("xl/sharedStrings.xml", ss)
-    return buf.getvalue()
+        ),
+        ("xl/worksheets/sheet1.xml", sheet),
+    ]
+    if shared:
+        members.append(("xl/sharedStrings.xml", ss))
+    return zip_package(members)
 
 
 def xlsx_cells(docs: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Arrow-batched XLSX → cell rows ``(doc_id, row, col, value,
     is_number)``.  Narrow stage, zero shuffles."""
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, p in zip(pdf["doc_id"], pdf[payload_col]):
-                for c in parse_xlsx(bytes(p) if p is not None else b""):
-                    rows.append({"doc_id": str(doc_id), **c})
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "row", "col", "value", "is_number"]
-            )
-
-    return docs.mapInPandas(kernel, schema=CELLS_SCHEMA)
+    return parsed_rows(docs, parse_xlsx, CELLS_SCHEMA, payload_col)

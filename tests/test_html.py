@@ -63,6 +63,29 @@ def test_html_spans_table_invariants(spark):
     assert dense.count() == 0
 
 
+def test_html_spans_table_skips_documents_without_spans(spark):
+    """A document whose main content is empty (only boilerplate, or no
+    markup at all) has no spans, so ``html_spans_table`` emits no row for
+    it; every other document gets exactly one row."""
+    docs = spark.createDataFrame(
+        [
+            ("boiler", "<html><body><nav><a href='/'>Home</a></nav>"
+                       "<footer>Copyright</footer></body></html>"),
+            ("empty", ""),
+            ("null", None),
+            ("good", "<html><body><article><p>kept text</p>"
+                     "<img src='a.png'></article></body></html>"),
+        ],
+        "doc_id string, html string",
+    )
+    rows = html_spans_table(docs).collect()
+    assert [r.doc_id for r in rows] == ["good"]
+    assert [tuple(s) for s in rows[0].spans] == [
+        ("text", "kept text", None, 0),
+        ("media", None, "a.png", 1),
+    ]
+
+
 def test_parser_failure_emits_error_span(spark):
     """O6 containment: a document whose parse raises yields a flagged
     ("error", ...) span — distinguishable from an empty document, never a

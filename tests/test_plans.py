@@ -156,6 +156,38 @@ def test_extract_kernels_arrow_per_doc(spark, tmp_path):
         assert n_exchanges(p) == exchanges, p
 
 
+def test_html_spans_table_narrow_and_one_write_exchange(spark, tmp_path, monkeypatch):
+    """``html_spans_table`` is one narrow per-row ``MapInArrow`` stage (no
+    exchange, no aggregate, no pandas kernel), so ``run_html_job``'s write
+    shuffles once: the count-free ``repartition("bucket")``."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from autoextract import corpus
+    from autoextract.operators.html import html_spans_table
+    from autoextract.plans import pipeline
+
+    path = str(tmp_path / "html_docs")
+    corpus.gen_html_corpus(spark, 20, seed=3)[0].write.parquet(path)
+    docs = spark.read.parquet(path)
+    p = plan_str(html_spans_table(docs), "simple")
+    assert "MapInArrow html_doc_spans" in p, p
+    assert n_exchanges(p) == 0, p
+    assert "Aggregate" not in p and "MapInPandas" not in p, p
+
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def record(self, *args, **kwargs):
+        written.append(self._df)
+        return parquet(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", record)
+    pipeline.run_html_job(spark, docs, str(tmp_path / "out"), n_buckets=4)
+    assert len(written) == 1
+    p = plan_str(written[0], "simple")
+    assert n_exchanges(p) == 1 and "REPARTITION_BY_COL" in p, p
+
+
 def test_pdf_query_filter_pushdown(spark):
     """The pdf round-trip's doc_id < 300 filter reaches the parquet scan —
     at 10^12 docs the render stage must never see unselected rows."""

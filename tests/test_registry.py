@@ -215,7 +215,7 @@ def test_registry_rejects_duplicate_and_missing_oracle():
     ],
 )
 def test_rendered_fixture_batch_invariant(spark, name):
-    """``_map_rows`` kernels give the same rows when Arrow batches hold 7 rows,
+    """``map_rows`` kernels give the same rows when Arrow batches hold 7 rows,
     so nearly every batch boundary falls inside the fixture range."""
     from test_config_invariance import session_conf
 
