@@ -6,11 +6,11 @@ own: ``flat_map_rows`` runs such a function in one ``mapInArrow`` stage,
 one payload column into record dicts. Being per-row, none of them can depend
 on where Spark cuts the Arrow batches.
 
-A doc-keyed stage hash-partitions its rows on ``doc_id`` and sorts each
-partition by doc_id first, so every document arrives complete and contiguous
-in one task. ``per_doc`` turns a function over complete documents into the
-``mapInArrow`` kernel for such a partition; ``doc_bounds`` finds the
-documents inside one call of that function.
+A doc-keyed stage hash-partitions its rows on ``doc_id`` (or a function of
+it, such as the pipeline's bucket); ``docwise`` sorts each partition by
+doc_id first and runs a function over complete documents through
+``per_doc``, the ``mapInArrow`` kernel for one partition; ``doc_bounds``
+finds the documents inside one call of that function.
 """
 
 from __future__ import annotations
@@ -143,3 +143,10 @@ def per_doc(build):
 
     kernel.__name__ = build.__name__  # names the MapInArrow node in plans
     return kernel
+
+
+def docwise(clustered: DataFrame, build, schema, *order: str) -> DataFrame:
+    """Run ``build`` over the complete documents of ``clustered``, a frame
+    whose every document lies in one partition (the caller's exchange),
+    each partition sorted by ``order`` (doc_id first)."""
+    return clustered.sortWithinPartitions(*order).mapInArrow(per_doc(build), schema)

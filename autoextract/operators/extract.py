@@ -45,7 +45,7 @@ comparisons).
 
 Executed as one ``mapInArrow`` pass over doc_id-clustered, word-sorted
 partitions (the reference also extracts per document): the shared
-``_docwise.per_doc`` loop hands the kernel whole Arrow chunks of complete
+``_docwise.docwise`` helper hands the kernel whole Arrow chunks of complete
 documents, each column becomes NumPy once per chunk, and each document is a
 slice of those arrays — no pandas and no per-group Python call at the Spark
 level.
@@ -60,7 +60,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schema import AppSchema
-from ._docwise import doc_bounds, per_doc
+from ._docwise import doc_bounds, docwise
 
 SEPARATORS = ("：", ":")
 
@@ -308,20 +308,9 @@ def _extract_one_doc(words: dict[str, np.ndarray], schema: AppSchema) -> list[di
     return rows
 
 
-def extract_fields(ordered_words: DataFrame, schema: AppSchema) -> DataFrame:
-    """Ordered words (from ``layout.order_words``) → long-format extraction.
-
-    One row per leaf field per document: ``(doc_id, field_path, value,
-    word_ids, confidence)`` (FIXTURES.md §5). Documents are independent, so
-    this scales embarrassingly; the group size is bounded by the page cap at
-    ingest (the reference enforces ≤10 pages, ``pdf.py:122-124``).
-
-    Scale shape mirrors ``order_words``: one count-free repartition on
-    doc_id (AQE coalesces its task count by shuffle bytes), rows sorted
-    within partitions by (doc_id, word_id) — the order ``_extract_one_doc``
-    requires — and a single ``mapInArrow`` pass that walks document
-    boundaries: one Python call per partition, not one per document.
-    """
+def _extract_kernel(schema: AppSchema):
+    """The doc-wise kernel function behind ``extract_fields``: ordered words of
+    complete documents, each in ``word_id`` order → their field rows."""
 
     def extract_chunk(tbl):
         import pyarrow as pa
@@ -342,12 +331,26 @@ def extract_fields(ordered_words: DataFrame, schema: AppSchema) -> DataFrame:
             "confidence": pa.array([r["confidence"] for r in rows], pa.float64()),
         })
 
-    return (
-        ordered_words.select("doc_id", *_WORD_COLUMNS)
-        .repartition("doc_id")
-        .sortWithinPartitions("doc_id", "word_id")
-        .mapInArrow(per_doc(extract_chunk), schema=EXTRACTED_SCHEMA)
-    )
+    return extract_chunk
+
+
+def extract_fields(ordered_words: DataFrame, schema: AppSchema) -> DataFrame:
+    """Ordered words (from ``layout.order_words``) → long-format extraction.
+
+    One row per leaf field per document: ``(doc_id, field_path, value,
+    word_ids, confidence)`` (FIXTURES.md §5). Documents are independent, so
+    this scales embarrassingly; the group size is bounded by the page cap at
+    ingest (the reference enforces ≤10 pages, ``pdf.py:122-124``).
+
+    Scale shape mirrors ``order_words``: one count-free repartition on
+    doc_id (AQE coalesces its task count by shuffle bytes), rows sorted
+    within partitions by (doc_id, word_id) — the order ``_extract_one_doc``
+    requires — and a single ``mapInArrow`` pass of ``_extract_kernel`` that
+    walks document boundaries: one Python call per partition, not one per
+    document.
+    """
+    clustered = ordered_words.select("doc_id", *_WORD_COLUMNS).repartition("doc_id")
+    return docwise(clustered, _extract_kernel(schema), EXTRACTED_SCHEMA, "doc_id", "word_id")
 
 
 def typed_nested_result(extracted: DataFrame, schema: AppSchema) -> DataFrame:
@@ -406,8 +409,8 @@ def nested_result(extracted: DataFrame, schema: AppSchema) -> DataFrame:
     JSON strings rather than structs so arbitrary schemas need no DDL; callers
     wanting typed columns apply ``from_json`` with a derived StructType.
 
-    Scale shape: count-free repartition on doc_id + sortWithinPartitions +
-    ONE ``mapInArrow`` pass per partition over the shared ``per_doc`` loop —
+    Scale shape: count-free repartition on doc_id, then ``docwise``'s
+    sortWithinPartitions + ONE ``mapInArrow`` pass per partition —
     not ``groupBy().applyInPandas``, whose per-group call overhead is real
     money at 10^12 docs (same reasoning as ``extract_fields``).
     """
@@ -433,11 +436,5 @@ def nested_result(extracted: DataFrame, schema: AppSchema) -> DataFrame:
             "indices_json": pa.array(indices_json, pa.string()),
         })
 
-    return (
-        extracted.repartition("doc_id")
-        .sortWithinPartitions("doc_id")
-        .mapInArrow(
-            per_doc(nested_chunk),
-            schema="doc_id string, extracted_json string, indices_json string",
-        )
-    )
+    schema_ddl = "doc_id string, extracted_json string, indices_json string"
+    return docwise(extracted.repartition("doc_id"), nested_chunk, schema_ddl, "doc_id")

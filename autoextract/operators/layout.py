@@ -19,11 +19,13 @@ implements the classic recipe the north_star prescribes:
 
 Pages are independent reading units (the reference also processes per page,
 ``ocr.py:157-175``). The Spark side is one kernel behind one shuffle:
-``_doc_sorted`` cleans the words JVM-side, hash-partitions them on ``doc_id``
-and sorts each partition by (doc_id, page, word_seq); one ``mapInArrow``
-pass then orders each page and assigns the global offsets (SURVEY.md §2 W1)
-over whole Arrow batches, emitting word rows (``order_words``) or one nested
-span row per document (``spans_table``). ``order_words_paged`` runs the same
+``_doc_clustered`` cleans the words JVM-side and hash-partitions them on
+``doc_id``; ``_docwise.docwise`` sorts each partition by ``WORD_ORDER`` and
+runs one ``mapInArrow`` pass that orders each page and assigns the global
+offsets (SURVEY.md §2 W1) over whole Arrow batches, emitting word rows
+(``order_words``) or one nested span row per document (``spans_table``).
+The resumable pipeline runs the same chunk kernels behind its own exchange, on
+the bucket (``plans.pipeline``). ``order_words_paged`` runs the same
 chunk kernel per (doc_id, page) group, so a pathological mega-document
 parallelizes across its pages instead of stalling one task (skew policy,
 SURVEY.md §4 item 1).
@@ -35,7 +37,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ._docwise import doc_bounds, per_doc
+from ._docwise import doc_bounds, docwise
 
 # Gap thresholds, in units of the page's median box height (the only robust
 # scale available without page dimensions). Deterministic constants — never
@@ -338,6 +340,9 @@ SPANS_TABLE_SCHEMA = (
     "media_ref:string, offset:int>>"
 )
 
+#: the layout kernels' input order: documents contiguous, words in page order
+WORD_ORDER = ("doc_id", "page", "word_seq")
+
 #: the chunk core's geometry memo is cleared before its keys' cumulative
 #: bytes would pass this; values are smaller than their keys, so one task's
 #: memo stays under twice this however large or diverse its pages are
@@ -383,20 +388,16 @@ def _clean(ocr_words: DataFrame) -> DataFrame:
     return out
 
 
-def _doc_sorted(ocr_words: DataFrame) -> DataFrame:
-    """The kernels' input contract: cleaned words, every document complete in
-    one partition and sorted by (doc_id, page, word_seq).
+def _doc_clustered(ocr_words: DataFrame) -> DataFrame:
+    """Cleaned words with every document complete in one partition: the
+    public operators' one exchange.
 
     The repartition names no count, so AQE coalesces its
     ``shuffle.partitions`` hash partitions by bytes (whole partitions: a
     document never spans two tasks) and small inputs skip the per-task
     Python cost. An input already so partitioned (``_docs_to_word_boxes``)
     elides the exchange."""
-    return (
-        _clean(ocr_words)
-        .repartition("doc_id")
-        .sortWithinPartitions("doc_id", "page", "word_seq")
-    )
+    return _clean(ocr_words).repartition("doc_id")
 
 
 def _layout_chunk(tbl):
@@ -476,32 +477,39 @@ def _order_chunk_arrow(tbl):
     return out
 
 
-def _spans_chunk_arrow(tbl):
-    """Chunk of complete docs → one row per doc with the assembled span array
-    (``SPANS_TABLE_SCHEMA``). All array building is pyarrow C++."""
+def _assemble_chunk_arrow(ordered):
+    """``order_words`` rows of complete docs, each doc's rows in ``word_id``
+    order (as ``_order_chunk_arrow`` emits them) → one row per doc with the
+    assembled span array (``SPANS_TABLE_SCHEMA``): the in-kernel twin of
+    ``assemble_spans`` for text and media spans. All array building is
+    pyarrow C++."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    perm, _, word_id, _, _, bounds = _layout_chunk(tbl)
-    taken = tbl.take(pa.array(perm))
-    kind = taken.column("kind").combine_chunks()
+    bounds = doc_bounds(ordered)
+    kind = ordered.column("kind").combine_chunks()
     is_text = pc.equal(kind, "text")
     struct = pa.StructArray.from_arrays(
         [
             kind,
-            pc.if_else(is_text, taken.column("content").combine_chunks(),
+            pc.if_else(is_text, ordered.column("content").combine_chunks(),
                        pa.scalar(None, pa.string())),
             pc.if_else(is_text, pa.scalar(None, pa.string()),
-                       taken.column("media_ref").combine_chunks()),
-            pa.array(word_id, type=pa.int32()),
+                       ordered.column("media_ref").combine_chunks()),
+            ordered.column("word_id").combine_chunks(),
         ],
         names=["kind", "text", "media_ref", "offset"],
     )
     spans = pa.ListArray.from_arrays(
         pa.array(bounds, type=pa.int32()), struct
     )
-    doc_ids = tbl.column("doc_id").take(pa.array(bounds[:-1]))
+    doc_ids = ordered.column("doc_id").take(pa.array(bounds[:-1]))
     return pa.table({"doc_id": doc_ids, "spans": spans})
+
+
+def _spans_chunk_arrow(tbl):
+    """Chunk of complete docs → their nested span rows, in one pass."""
+    return _assemble_chunk_arrow(_order_chunk_arrow(tbl))
 
 
 def _order_page_arrow(page):
@@ -517,10 +525,11 @@ def order_words(ocr_words: DataFrame) -> DataFrame:
     ``offset`` of the target schema — SURVEY.md §2 W1, replacing the
     reference's O(n²) re-match at ``ocr.py:311-322``).
 
-    Scale shape — exactly ONE shuffle: ``_doc_sorted`` co-locates and orders
-    each document, then a single ``mapInArrow`` pass assigns reading order
-    AND global offsets per document (no window, no second shuffle). Box
-    folding and the empty-word filter run JVM-side before the exchange.
+    Scale shape — exactly ONE shuffle: ``_doc_clustered`` co-locates each
+    document and ``docwise`` sorts it, then a single ``mapInArrow`` pass
+    assigns reading order AND global offsets per document (no window, no
+    second shuffle). Box folding and the empty-word filter run JVM-side
+    before the exchange.
 
     Skew: hash repartition balances documents across tasks; a pathological
     mega-document is bounded by the ingest page cap (the reference enforces
@@ -528,8 +537,8 @@ def order_words(ocr_words: DataFrame) -> DataFrame:
     in-memory comfortably. For corpora with unbounded single documents use
     ``order_words_paged`` (page-parallel variant) below.
     """
-    return _doc_sorted(ocr_words).mapInArrow(
-        per_doc(_order_chunk_arrow), schema=ORDERED_SCHEMA
+    return docwise(
+        _doc_clustered(ocr_words), _order_chunk_arrow, ORDERED_SCHEMA, *WORD_ORDER
     )
 
 
@@ -552,14 +561,13 @@ def order_words_auto(
     exchange (Spark plans the second read as a ReusedExchange), so the
     source parquet is scanned once however many branches fire.
     """
-    tagged = _doc_sorted(ocr_words).withColumn(
-        "__doc_n", F.count("*").over(Window.partitionBy("doc_id"))
+    tagged = (
+        _doc_clustered(ocr_words)
+        .sortWithinPartitions(*WORD_ORDER)
+        .withColumn("__doc_n", F.count("*").over(Window.partitionBy("doc_id")))
     )
-    normal = (
-        tagged.where(F.col("__doc_n") <= mega_threshold)
-        .drop("__doc_n")
-        .mapInArrow(per_doc(_order_chunk_arrow), schema=ORDERED_SCHEMA)
-    )
+    normal = tagged.where(F.col("__doc_n") <= mega_threshold).drop("__doc_n")
+    normal = docwise(normal, _order_chunk_arrow, ORDERED_SCHEMA, *WORD_ORDER)
     mega = order_words_paged(
         tagged.where(F.col("__doc_n") > mega_threshold).drop("__doc_n"),
         _pre_cleaned=True,
@@ -590,14 +598,14 @@ def spans_table(ocr_words: DataFrame) -> DataFrame:
     groupBy/collect_list stage and word-level rows never re-cross the Arrow
     boundary (output is one nested row per document).
 
-    The shuffle is ``_doc_sorted``'s count-free repartition; an input already
-    so partitioned (``_docs_to_word_boxes``) elides it.
+    The shuffle is ``_doc_clustered``'s count-free repartition; an input
+    already so partitioned (``_docs_to_word_boxes``) elides it.
 
     Semantically identical to ``assemble_spans(order_words(df))`` (tested);
     prefer this form in pipelines that don't also need the word-level table.
     """
-    return _doc_sorted(ocr_words).mapInArrow(
-        per_doc(_spans_chunk_arrow), schema=SPANS_TABLE_SCHEMA
+    return docwise(
+        _doc_clustered(ocr_words), _spans_chunk_arrow, SPANS_TABLE_SCHEMA, *WORD_ORDER
     )
 
 

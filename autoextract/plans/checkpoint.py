@@ -35,7 +35,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -65,11 +65,13 @@ LINEAGE_SCHEMA = T.StructType(
 )
 
 
+def bucket_of(n_buckets: int, key: str = "doc_id") -> Column:
+    """Deterministic bucket of each row's ``key``, computed JVM-side."""
+    return F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
+
+
 def with_bucket(df: DataFrame, n_buckets: int, key: str = "doc_id") -> DataFrame:
-    """Deterministic bucket assignment, computed JVM-side."""
-    return df.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
-    )
+    return df.withColumn("bucket", bucket_of(n_buckets, key))
 
 
 class CheckpointStore:

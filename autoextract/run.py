@@ -37,7 +37,10 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--n-docs", type=int, default=1000)
     p.add_argument("--seed", type=int, default=42)
     p.add_argument("--mega-doc", action="store_true", help="include the skew fixture")
-    p.add_argument("--n-buckets", type=int, default=32)
+    p.add_argument(
+        "--n-buckets", type=int, default=32,
+        help="checkpoint and file buckets; also caps a stage's kernel task count, so keep it >= cores",
+    )
     p.add_argument("--parallelism", type=int, default=None)
     p.add_argument("--run-id", default=None)
     args = p.parse_args(argv)

@@ -8,7 +8,7 @@ checkpoint anti-filter. This module is the drop-in *upgrade path* (SURVEY.md
 processes exactly the files that arrived since the last run — Spark's own
 streaming checkpoint (WAL of processed files) replaces hand-rolled source
 bookkeeping, and each micro-batch reuses the identical batch transformation
-(``foreachBatch`` → the same ``order_words``/``assemble_spans`` plan).
+(``foreachBatch`` → the same ``spans_table`` plan as the batch operators).
 
 Exactly-once story: source progress lives in the streaming checkpoint; sink
 idempotence comes from keying each micro-batch's output on its ``batch_id``

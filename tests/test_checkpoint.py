@@ -2,7 +2,7 @@
 
 * every ``bucket=`` directory a job writes holds exactly one data file,
   whatever the shuffle configuration (the partitioned write relies on each
-  bucket landing in one write task);
+  bucket landing in one write task), and that file is sorted by doc_id;
 * checkpoint / lineage bookkeeping runs no Spark job;
 * the append-only stores ignore a half-written append and still read
   directories written by Spark.
@@ -108,6 +108,40 @@ def test_merge_reextract_one_file_per_bucket(spark, words, tmp_path):
     edits = words.join(targets, "doc_id", "left_semi")
     assert merge_reextract(spark, words, edits, SHIPPING_SCHEMA, out, n_buckets=N_BUCKETS) == 3
     _assert_one_file_per_bucket(os.path.join(out, "extracted"))
+
+
+def _assert_files_sorted_by_doc_id(table_dir: str) -> None:
+    import pyarrow.parquet as pq
+
+    files = glob.glob(os.path.join(table_dir, "bucket=*", "*.parquet"))
+    assert files, f"no data files under {table_dir}"
+    for f in files:
+        ids = pq.read_table(f, columns=["doc_id"]).column("doc_id").to_pylist()
+        assert ids == sorted(ids), f
+
+
+@pytest.mark.parametrize("job", ["spans", "extract", "full"])
+def test_layout_job_files_sorted_by_doc_id(spark, words, tmp_path, job):
+    """The write sorts each task by (bucket, doc_id), so every ``bucket=``
+    file of ``spans`` and ``extracted`` is in doc_id order, also when one
+    task writes several buckets."""
+    out = str(tmp_path / job)
+    if job == "spans":
+        pipeline.run_spans_job(spark, words, out, n_buckets=N_BUCKETS)
+    elif job == "extract":
+        pipeline.run_extract_job(spark, words, SHIPPING_SCHEMA, out, n_buckets=N_BUCKETS)
+    else:
+        pipeline.run_full_job(spark, words, SHIPPING_SCHEMA, out, n_buckets=N_BUCKETS)
+    for table in ("spans", "extracted"):
+        if os.path.isdir(os.path.join(out, table)):
+            _assert_files_sorted_by_doc_id(os.path.join(out, table))
+
+
+def test_html_job_files_sorted_by_doc_id(spark, tmp_path):
+    docs, _ = corpus.gen_html_corpus(spark, 40, seed=5)
+    out = str(tmp_path / "html")
+    pipeline.run_html_job(spark, docs, out, n_buckets=N_BUCKETS)
+    _assert_files_sorted_by_doc_id(os.path.join(out, "spans"))
 
 
 # -- bookkeeping runs no Spark job ---------------------------------------

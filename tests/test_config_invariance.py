@@ -4,9 +4,12 @@
 repartition on doc_id without a partition count, so the number and size of
 their kernel tasks follow AQE, the shuffle-partition conf and the Arrow batch
 size; ``html_spans_table`` is a per-row stage whose batches follow the Arrow
-batch size. Each perturbation below must reproduce the default run's output
-exactly (the span table, the full ``order_words`` rows, the extracted fields,
-the per-document nested JSON and the HTML span table):
+batch size. The resumable jobs run the same kernels behind one exchange on
+the bucket instead. Each perturbation below must reproduce the default run's
+output exactly (the span table, the full ``order_words`` rows, the extracted
+fields, the per-document nested JSON, the HTML span table, and what
+``run_spans_job``, ``run_full_job`` and ``run_html_job`` write), and the
+jobs must write what the operators return:
 
 * ``maxRecordsPerBatch=7`` splits nearly every document across Arrow
   batches, exercising the kernels' doc-boundary buffering — the path that
@@ -26,9 +29,11 @@ from autoextract import corpus
 from autoextract.operators.extract import extract_fields, nested_result
 from autoextract.operators.html import html_spans_table
 from autoextract.operators.layout import order_words, spans_table
+from autoextract.plans import pipeline
 from autoextract.schema import SHIPPING_SCHEMA
 
 N_DOCS = 40
+N_BUCKETS = 4
 
 PERTURBATIONS = {
     "arrow_batch_7": {"spark.sql.execution.arrow.maxRecordsPerBatch": "7"},
@@ -70,7 +75,14 @@ def html_docs(spark):
     df.unpersist()
 
 
-def _results(words, html_docs) -> tuple[dict, list, list, list, list]:
+def _fields(df) -> list:
+    return sorted(
+        (r.doc_id, r.field_path, r.value, tuple(r.word_ids), r.confidence)
+        for r in df.collect()
+    )
+
+
+def _results(words, html_docs, out_dir) -> tuple:
     # DataFrames are built inside the caller's conf block: a count-free
     # repartition takes its initial partition count at planning time
     spans = {r.doc_id: r.spans for r in spans_table(words).collect()}
@@ -78,37 +90,53 @@ def _results(words, html_docs) -> tuple[dict, list, list, list, list]:
     # (doc_id, page, seq) is unique, so the sort never compares None cells
     rows = sorted(tuple(r) for r in ordered.collect())
     extracted = extract_fields(ordered, SHIPPING_SCHEMA)
-    fields = sorted(
-        (r.doc_id, r.field_path, r.value, tuple(r.word_ids), r.confidence)
-        for r in extracted.collect()
-    )
+    fields = _fields(extracted)
     nested = sorted(
         (r.doc_id, r.extracted_json, r.indices_json)
         for r in nested_result(extracted, SHIPPING_SCHEMA).collect()
     )
     html = sorted((r.doc_id, r.spans) for r in html_spans_table(html_docs).collect())
-    return spans, fields, rows, nested, html
+
+    # the resumable jobs, each into a fresh output directory
+    spark = words.sparkSession
+    job_dirs = {job: str(out_dir / job) for job in ("spans", "full", "html")}
+    pipeline.run_spans_job(spark, words, job_dirs["spans"], n_buckets=N_BUCKETS)
+    pipeline.run_full_job(spark, words, SHIPPING_SCHEMA, job_dirs["full"], n_buckets=N_BUCKETS)
+    pipeline.run_html_job(spark, html_docs, job_dirs["html"], n_buckets=N_BUCKETS)
+    job_spans = {
+        job: {r.doc_id: r.spans for r in pipeline.read_spans(spark, d).collect()}
+        for job, d in job_dirs.items()
+    }
+    full_fields = _fields(pipeline.read_extracted(spark, job_dirs["full"]))
+    return (
+        spans, fields, rows, nested, html,
+        job_spans["spans"], job_spans["full"], full_fields, job_spans["html"],
+    )
 
 
 @pytest.fixture(scope="module")
-def baseline(words, html_docs):
-    spans, fields, rows, nested, html = _results(words, html_docs)
+def baseline(words, html_docs, tmp_path_factory):
+    got = _results(words, html_docs, tmp_path_factory.mktemp("baseline"))
+    spans, fields, rows, nested, html, job_spans, full_spans, full_fields, job_html = got
     assert len(spans) == N_DOCS and fields
     assert len({r[0] for r in rows}) == N_DOCS
     assert len(nested) == N_DOCS
     assert len(html) == N_DOCS
-    return spans, fields, rows, nested, html
+    # the jobs write exactly what the operators return
+    assert job_spans == spans
+    assert full_spans == spans
+    assert full_fields == fields
+    assert sorted(job_html.items()) == html
+    return got
 
 
 @pytest.mark.parametrize("name", sorted(PERTURBATIONS))
-def test_span_pipeline_config_invariant(spark, words, html_docs, baseline, name):
+def test_span_pipeline_config_invariant(spark, words, html_docs, baseline, tmp_path, name):
     conf = PERTURBATIONS[name]
     before = {k: spark.conf.get(k, None) for k in conf}
     with session_conf(spark, conf):
-        got = _results(words, html_docs)
+        got = _results(words, html_docs, tmp_path)
     assert {k: spark.conf.get(k, None) for k in conf} == before
-    assert got[0] == baseline[0]
-    assert got[1] == baseline[1]
-    assert got[2] == baseline[2]
-    assert got[3] == baseline[3]
-    assert got[4] == baseline[4]
+    assert len(got) == len(baseline)
+    for i, (g, b) in enumerate(zip(got, baseline)):
+        assert g == b, i
